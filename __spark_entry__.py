@@ -3,7 +3,8 @@
 ``entry(spark)`` runs the flagship star-join aggregate on sf0.001.
 ``queries()`` exposes one callable per implemented operator from
 SURVEY.md §2 (plus beyond-reference operators); ``oracle_sql()`` gives the
-DuckDB twin for each.
+DuckDB twin for each. Both are read from ``REGISTRY`` at the end of this
+file, which declares each query once.
 
 Determinism notes (hash-match contract):
 - Aggregates over floating-point columns are computed in DECIMAL (exact,
@@ -17,6 +18,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -2503,8 +2505,6 @@ def _neardup_label_index(spark: SparkSession, sf_dir: str):
     and the CC labeling — is identical; equality pinned in
     tests/test_cluster_index.py), hence the DuckDB oracles, which DO
     recompute from scratch, still hash-match."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.operators.cluster_index import (
         FORMAT_VERSION,
         NearDupLabels,
@@ -2512,16 +2512,8 @@ def _neardup_label_index(spark: SparkSession, sf_dir: str):
 
     # FORMAT_VERSION in the tag: a layout bump changes the cache path,
     # so the stale-format index is simply never loaded (labels() would
-    # refuse it) and a fresh one is built under the new tag. The corpus
-    # fingerprint makes regenerated data at the same path a cache miss.
-    params = (
-        f"{os.path.abspath(sf_dir)}|t0.5|n3|v{FORMAT_VERSION}"
-        f"|data{_corpus_fingerprint(sf_dir)}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".labels_cache", tag
-    )
+    # refuse it) and a fresh one is built under the new tag.
+    path = _artifact_path("labels", sf_dir, f"t0.5|n3|v{FORMAT_VERSION}")
     idx = NearDupLabels.load(spark, path)
     ver = idx.layout_version()
     if ver is None or ver < FORMAT_VERSION:
@@ -2740,9 +2732,9 @@ def _ann_recall_certificate(
     bound is an unpartitioned window sum over the per-query rows
     (O(queries) rows by construction) instead of a crossJoin against a
     re-aggregated copy of the whole per-query subtree — the before
-    plan ran the left join + groupBy TWICE (plans/r14/*_before.txt:
-    nodes 1-12 and 13-27 are the same subtree) with 6 Exchanges and 2
-    SortMergeJoins; the after plan has the subtree once, 2 Exchanges,
+    plan ran the left join + groupBy TWICE
+    (plans/r14/ann_ivf_topk_before.txt: nodes 1-12 and 13-27 are the
+    same subtree) with 6 Exchanges and 2 SortMergeJoins; the after plan has the subtree once, 2 Exchanges,
     no sort, no BroadcastNestedLoopJoin."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -2847,18 +2839,9 @@ def q_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape stays pinned in pytest (tests/test_scale_ops.py,
     tests/test_plans.py) and raw lists remain on ``IvfIndex.query``.
     """
-    import hashlib
-
     cat = _cat(spark, sf_dir)
     emb = cat["embeddings"]
-    params = (
-        f"{os.path.abspath(sf_dir)}|nc16|it1"
-        f"|data{_corpus_fingerprint(sf_dir, 'embeddings')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".ivf_cache", tag
-    )
+    path = _artifact_path("ivf", sf_dir, "nc16|it1", "embeddings")
     idx = IvfIndex.load(spark, path)
     if not idx.exists():
         idx = IvfIndex.build(emb, path, num_centroids=16, kmeans_iters=1)
@@ -2913,27 +2896,20 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     append/remove/compact/replay semantics are untouched (whole-row
     operations; tests/test_compaction.py).
 
-    The index caches under the repo-local ``.ivfpq_cache/`` (the
-    ``.ivf_cache`` idiom, data-fingerprinted), so repeated bench runs
-    measure the probe, not the build. SELF-CERTIFYING: recall vs the
+    The index caches under the repo-local ``.ivfpq_cache/`` (see
+    :func:`_artifact_path`), so repeated bench runs measure the probe,
+    not the build. SELF-CERTIFYING: recall vs the
     in-engine brute-force twin, measured 0.80/0.82/0.74 at
     sf0.001/0.01/0.1 for nc16/nprobe8/m16×256/rerank20, certified
     bound 0.65 — above raw full-scan PQ's floor while touching
     ~nprobe/nc of the corpus (recall-vs-nprobe sweep committed in
     docs/BENCH_NOTES.md)."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.operators.similarity import IvfIndex
 
     cat = _cat(spark, sf_dir)
     emb = cat["embeddings"]
-    params = (
-        f"{os.path.abspath(sf_dir)}|nc16|it1|m16|nb8|pqit6"
-        f"|data{_corpus_fingerprint(sf_dir, 'embeddings')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".ivfpq_cache", tag
+    path = _artifact_path(
+        "ivfpq", sf_dir, "nc16|it1|m16|nb8|pqit6", "embeddings"
     )
     idx = IvfIndex.load(spark, path)
     if not idx.exists():
@@ -3301,7 +3277,7 @@ def q_quality_nb_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Merge budget for the driver BPE queries. 12 merges complete without
 #: early-stop (min_pair_count=2) at sf0.001/sf0.01/sf0.1 — measured r9;
-#: the every-run sf0.001 parity sweep re-pins this (an early stop would
+#: the slow-tier sf0.001 parity sweep re-pins this (an early stop would
 #: row-count-mismatch the oracle's fixed 12-rank recursion).
 BPE_NUM_MERGES = 12
 
@@ -3331,25 +3307,38 @@ def _corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
     return hashlib.md5(fp_str.encode()).hexdigest()[:12]
 
 
-def _bpe_tok(spark: SparkSession, sf_dir: str):
-    """Fit-once cached BpeTokenizer for the driver queries (the
-    ``.ivf_cache`` idiom: keyed by sf_dir + params + a corpus data
-    fingerprint — see _corpus_fingerprint — under a repo-local dir, so
-    repeated bench runs measure the merge-table read / tokenization,
-    not training — training economics are measured separately in
-    docs/BENCH_NOTES.md 'BPE trainer round economics')."""
+def _artifact_path(
+    kind: str, sf_dir: str, params: str, table: str = "documents"
+) -> str:
+    """Repo-local path of a build-or-load query artifact (fitted
+    tokenizers and models, ANN indexes, cluster labels, change-feed
+    tables, IVM state): ``<repo>/.<kind>_cache/<tag>``.
+
+    The tag is the first 12 hex digits of the md5 of ``sf_dir`` (made
+    absolute), the build ``params`` and the :func:`_corpus_fingerprint`
+    of the training ``table``. Repeated bench runs therefore measure the
+    artifact read / probe, not the build; changed build parameters or
+    regenerated data at the same path are a cache MISS (a fresh build)
+    instead of a stale-artifact reuse."""
     import hashlib
 
+    key = (
+        f"{os.path.abspath(sf_dir)}|{params}"
+        f"|data{_corpus_fingerprint(sf_dir, table)}"
+    )
+    tag = hashlib.md5(key.encode()).hexdigest()[:12]
+    return os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), f".{kind}_cache", tag
+    )
+
+
+def _bpe_tok(spark: SparkSession, sf_dir: str):
+    """Fit-once cached BpeTokenizer for the driver queries (see
+    :func:`_artifact_path`); training economics are measured separately
+    in docs/BENCH_NOTES.md 'BPE trainer round economics'."""
     from dataeng_azure_spotify_spark.operators.bpe import BpeTokenizer
 
-    params = (
-        f"{os.path.abspath(sf_dir)}|nm{BPE_NUM_MERGES}|mpc2"
-        f"|data{_corpus_fingerprint(sf_dir)}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".bpe_cache", tag
-    )
+    path = _artifact_path("bpe", sf_dir, f"nm{BPE_NUM_MERGES}|mpc2")
     tok = BpeTokenizer(spark, path)
     if not tok.exists():
         cat = _cat(spark, sf_dir)
@@ -3406,22 +3395,13 @@ def q_quality_nb_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_llm_ops.py) but exercising the artifact read path a
     streaming admitter uses, so the fit→persist→load→score loop is
     what gets hash-certified."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.functions.text import gopher_pass_col
     from dataeng_azure_spotify_spark.operators.quality_nb import (
         NbQualityModel,
     )
 
     cat = _cat(spark, sf_dir)
-    params = (
-        f"{os.path.abspath(sf_dir)}|b4096"
-        f"|data{_corpus_fingerprint(sf_dir)}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".nb_cache", tag
-    )
+    path = _artifact_path("nb", sf_dir, "b4096")
     model = NbQualityModel(spark, path)
     if not model.exists():
         model = NbQualityModel.fit(
@@ -3507,7 +3487,7 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: rounds over a 4-char piece cap with a binding 120-piece seed cut
 #: (204 eligible multi-char pieces at every SF — measured r9, so the
 #: deterministic (cnt DESC, piece ASC) cap cut is exercised); the
-#: every-run sf0.001 parity sweep re-pins all four against the
+#: slow-tier sf0.001 parity sweep re-pins all four against the
 #: unrolled recursive-CTE oracle.
 UNIGRAM_PARAMS = dict(
     n_iters=2, max_piece_len=4, min_count=2, max_pieces=120
@@ -3515,27 +3495,18 @@ UNIGRAM_PARAMS = dict(
 
 
 def _unigram_tok(spark: SparkSession, sf_dir: str):
-    """Fit-once cached UnigramTokenizer for the driver queries (the
-    ``.bpe_cache`` idiom: keyed by sf_dir + params + a corpus data
-    fingerprint — see _corpus_fingerprint — under a repo-local dir, so
-    repeated bench runs measure the piece-table read / tokenization,
-    not training — training economics are measured separately in
-    docs/BENCH_NOTES.md)."""
-    import hashlib
-
+    """Fit-once cached UnigramTokenizer for the driver queries (see
+    :func:`_artifact_path`); training economics are measured separately
+    in docs/BENCH_NOTES.md."""
     from dataeng_azure_spotify_spark.operators.unigram import (
         UnigramTokenizer,
     )
 
     p = UNIGRAM_PARAMS
-    params = (
-        f"{os.path.abspath(sf_dir)}|t{p['n_iters']}|L{p['max_piece_len']}"
-        f"|mc{p['min_count']}|mp{p['max_pieces']}"
-        f"|data{_corpus_fingerprint(sf_dir)}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".unigram_cache", tag
+    path = _artifact_path(
+        "unigram", sf_dir,
+        f"t{p['n_iters']}|L{p['max_piece_len']}"
+        f"|mc{p['min_count']}|mp{p['max_pieces']}",
     )
     tok = UnigramTokenizer(spark, path)
     if not tok.exists():
@@ -5339,25 +5310,16 @@ def _cdf_orders_versions(cat: Catalog) -> "tuple[DataFrame, DataFrame]":
 
 def _cdf_orders_table(spark: SparkSession, sf_dir: str):
     """Fit-once cached ParquetSnapshotTable (cdf_keys=o_orderkey) with
-    the two versions committed — the ``.ivf_cache`` idiom (tag keyed by
-    sf_dir + a corpus data fingerprint) so repeated bench runs measure
-    the PULL (persisted-partial scan), not the table build; a partial
-    or stale build is detected by history length and rebuilt."""
-    import hashlib
-
+    the two versions committed (see :func:`_artifact_path`), so repeated
+    bench runs measure the PULL (persisted-partial scan), not the table
+    build; a partial or stale build is detected by history length and
+    rebuilt."""
     from dataeng_azure_spotify_spark.statefs import statefs_for
     from dataeng_azure_spotify_spark.streaming.gold import (
         ParquetSnapshotTable,
     )
 
-    params = (
-        f"{os.path.abspath(sf_dir)}|cdf-v1"
-        f"|data{_corpus_fingerprint(sf_dir, 'orders')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".cdf_cache", tag
-    )
+    base = _artifact_path("cdf", sf_dir, "cdf-v1", "orders")
     t = ParquetSnapshotTable(spark, base, cdf_keys=["o_orderkey"])
     if len(t.history()) != 2:
         statefs_for(base, spark).rmtree(base)
@@ -5425,21 +5387,12 @@ def _cdf_schema_table(spark: SparkSession, sf_dir: str):
     ``o_orderpriority AS priority`` — a column-add overwrite, which
     persists the r12 full-rewrite change partial
     (streaming/gold.py _write_schema_change_partial)."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.statefs import statefs_for
     from dataeng_azure_spotify_spark.streaming.gold import (
         ParquetSnapshotTable,
     )
 
-    params = (
-        f"{os.path.abspath(sf_dir)}|cdfse-v1"
-        f"|data{_corpus_fingerprint(sf_dir, 'orders')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    base = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".cdf_cache", tag
-    )
+    base = _artifact_path("cdf", sf_dir, "cdfse-v1", "orders")
     t = ParquetSnapshotTable(spark, base, cdf_keys=["o_orderkey"])
     if len(t.history()) != 3:
         statefs_for(base, spark).rmtree(base)
@@ -5525,21 +5478,12 @@ def _ivm_events_view(spark: SparkSession, sf_dir: str):
     — two insert runs splitting events by user parity, then a delete
     run retracting every user_id % 10 == 0 row — so the maintained
     view equals a from-scratch aggregate over the surviving rows."""
-    import hashlib
-
     from dataeng_azure_spotify_spark.operators.ivm import (
         MaterializedAggregate,
     )
     from dataeng_azure_spotify_spark.statefs import statefs_for
 
-    params = (
-        f"{os.path.abspath(sf_dir)}|ivm-v1"
-        f"|data{_corpus_fingerprint(sf_dir, 'events')}"
-    )
-    tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    state = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), ".ivm_cache", tag
-    )
+    state = _artifact_path("ivm", sf_dir, "ivm-v1", "events")
     view = MaterializedAggregate(
         state, keys=["event_type"], sums={"value_sum": "value"}
     )
@@ -5604,281 +5548,31 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_star_join_agg(spark, SF_SMOKE)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering note: the driver's correctness harness checks the FIRST 50
-    # entries in dict order. Round-12 rotation (per the r11 verdict
-    # Next #1): positions 1-33 are the STALE tier — the 33 queries whose
-    # last driver window was r9 (the LLM dedup/ANN/curation block,
-    # including knn_label_accuracy and pagerank_central_docs, two of the
-    # three steal-suspect r11 driver lines — they get fresh lines here).
-    # Positions 34-35 are this round's NEW queries (the
-    # schema-evolution CDF twin and the directed containment join).
-    # Positions 36-50 refill from the r10-certified tier,
-    # funnel_one_pass first (the r11 verdict's weak item gets a fresh
-    # driver certification after its A/B). Everything below 50 (the
-    # r11-certified tier + remaining r10) stays continuously verified by
-    # tests/test_oracle_parity.py at sf0.001 every run and the
-    # slow-marked sf0.01 sweep (the driver's scale).
-    return {
-        # --- stale tier: last driver window r9 (33) ---
-        "ann_ivf_index_topk": q_ann_ivf_index_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "ann_pq_topk": q_ann_pq_topk,
-        "bm25_search": q_bm25_search,
-        "cap_per_source": q_cap_per_source,
-        "chunk_documents": q_chunk_documents,
-        "contamination_check": q_contamination_check,
-        "corpus_curation": q_corpus_curation,
-        "decontaminate": q_decontaminate,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "dedup_keep_best": q_dedup_keep_best,
-        "gopher_quality": q_gopher_quality,
-        "jl_project": q_jl_project,
-        "knn_label_accuracy": q_knn_label_accuracy,
-        "knn_label_accuracy_full": q_knn_label_accuracy_full,
-        "length_quantile_filter": q_length_quantile_filter,
-        "neardup_rate_by_source": q_neardup_rate_by_source,
-        "neardup_triangles": q_neardup_triangles,
-        "ngram_lm_score": q_ngram_lm_score,
-        "pack_sequences": q_pack_sequences,
-        "pagerank_central_docs": q_pagerank_central_docs,
-        "pca_project": q_pca_project,
-        "quantize_embeddings": q_quantize_embeddings,
-        "repetition_stats": q_repetition_stats,
-        "sample_exact_n": q_sample_exact_n,
-        "sample_weighted": q_sample_weighted,
-        "shard_corpus": q_shard_corpus,
-        "source_mix": q_source_mix,
-        "split_leakage_safe": q_split_leakage_safe,
-        "stratified_sample": q_stratified_sample,
-        "strip_boilerplate": q_strip_boilerplate,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        # --- r12-new (2) ---
-        "change_feed_schema_evolution": q_change_feed_schema_evolution,
-        "dedup_ngram_containment": q_dedup_ngram_containment,
-        # --- r10-certified refills (15) ---
-        "funnel_one_pass": q_funnel_one_pass,
-        "ann_ivfpq_topk": q_ann_ivfpq_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "approx_distinct": q_approx_distinct,
-        "asof_join": q_asof_join,
-        "blocklist_filter": q_blocklist_filter,
-        "bpe_merge_table": q_bpe_merge_table,
-        "bpe_tokenize_stats": q_bpe_tokenize_stats,
-        "bucketize_case_when": q_bucketize,
-        "cohort_retention": q_cohort_retention,
-        "constant_injection": q_constant_injection,
-        "conversion_latency": q_conversion_latency,
-        "date_dim": q_date_dim,
-        "doc_fingerprints": q_doc_fingerprints,
-        "dup_span_stats": q_dup_span_stats,
-        # position 51+ (outside the driver window; oracle-checked by
-        # the pytest parity sweeps at sf0.001 every run + sf0.01 slow):
-        "email_validation": q_email_validation,
-        "scd2_incremental": q_scd2_incremental,
-        "scd2_asof_lookup": q_scd2_asof_lookup,
-        "dedup_latest_per_key": q_dedup_latest,
-        "topk_per_group": q_topk_per_group,
-        "events_tumbling_window": q_events_tumbling,
-        "running_totals": q_running_totals,
-        "window_rank_suite": q_window_rank_suite,
-        "rollup_agg": q_rollup_agg,
-        "cube_agg": q_cube_agg,
-        "grouping_sets": q_grouping_sets,
-        "distinct_agg": q_distinct_agg,
-        "set_ops": q_set_ops,
-        "pivot_event_counts": q_pivot_event_counts,
-        "unpivot_metrics": q_unpivot_metrics,
-        "value_histogram": q_value_histogram,
-        "percentile_summary": q_percentile_summary,
-        "incremental_filter": q_incremental_filter,
-        "expectations_drop": q_expectations_drop,
-        "tpch_q2": q_tpch_q2,
-        "tpch_q3": q_tpch_q3,
-        "tpch_q4": q_tpch_q4,
-        "tpch_q5": q_tpch_q5,
-        "tpch_q6": q_tpch_q6,
-        "tpch_q7": q_tpch_q7,
-        "tpch_q8": q_tpch_q8,
-        "tpch_q9": q_tpch_q9,
-        "tpch_q10": q_tpch_q10,
-        "tpch_q11": q_tpch_q11,
-        "tpch_q12": q_tpch_q12,
-        "tpch_q13": q_tpch_q13,
-        "tpch_q14": q_tpch_q14,
-        "tpch_q15": q_tpch_q15,
-        "tpch_q16": q_tpch_q16,
-        "tpch_q17": q_tpch_q17,
-        "tpch_q18": q_tpch_q18,
-        "tpch_q19": q_tpch_q19,
-        "tpch_q20": q_tpch_q20,
-        "tpch_q21": q_tpch_q21,
-        "tpch_q22": q_tpch_q22,
-        "change_feed_orders": q_change_feed_orders,
-        "ivm_events_view": q_ivm_events_view,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "simhash_fingerprints": q_simhash_fingerprints,
-        "simhash_neardup": q_simhash_neardup,
-        "semantic_dedup": q_semantic_dedup,
-        "dsir_select": q_dsir_select,
-        "heavy_hitters": q_heavy_hitters,
-        "zorder_code": q_zorder_code,
-        "text_stats": q_text_stats,
-        "token_counts": q_token_counts,
-        "multimodal_features": q_multimodal_features,
-        "json_extract_agg": q_json_extract_agg,
-        "pii_redaction": q_pii_redaction,
-        "scalar_max_watermark": q_scalar_max_watermark,
-        "profile_docs": q_profile_docs,
-        "sentence_split": q_sentence_split,
-        "star_join_asof": q_star_join_asof,
-        "range_join": q_range_join,
-        "funnel_analysis": q_funnel_analysis,
-        "metric_anomalies": q_metric_anomalies,
-        "gap_fill": q_gap_fill,
-        "user_activity_gaps": q_user_activity_gaps,
-        "event_transitions": q_event_transitions,
-        "embedding_class_stats": q_embedding_class_stats,
-        "event_attribution": q_event_attribution,
-        "events_sliding_window": q_events_sliding_window,
-        "events_session_window": q_events_session_window,
-        "unigram_vocab_table": q_unigram_vocab_table,
-        "unigram_tokenize_stats": q_unigram_tokenize_stats,
-        "quality_nb_model_score": q_quality_nb_model_score,
-        "nb_threshold_sweep": q_nb_threshold_sweep,
-        "remove_dup_spans": q_remove_dup_spans,
-        "substring_dup_spans": q_substring_dup_spans,
-        "temperature_mix": q_temperature_mix,
-        "quality_nb_score": q_quality_nb_score,
-        "pricing_summary": q_pricing_summary,
-        "star_join": q_star_join,
-        "star_join_wide": q_star_join_wide,
-        "star_join_agg": q_star_join_agg,
-        "scd1_upsert": q_scd1_upsert,
-        "scd2_history": q_scd2_history,
-    }
+class Query(NamedTuple):
+    """One catalog query: the Spark wrapper the driver calls with
+    ``(spark, sf_dir)``, the DuckDB SQL twin its result must hash-match,
+    and the tags other code reads:
+
+    - ``headline``: one of bench.py's fixed 15 headline queries, whose
+      summed time is the cross-round metric. Membership never changes.
+    - ``heavy``: variance-prone or slow to warm up; bench.py gives it
+      extra timed samples.
+    - ``plan_time_fit``: the wrapper fits or builds on the driver
+      (k-means, index builds, pagerank iterations) while the plan is
+      being built; tests/plan_shapes.py keeps it out of the plan
+      snapshots.
+    """
+
+    name: str
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str
+    tags: tuple[str, ...] = ()
 
 
-def oracle_sql() -> dict[str, str]:
-    return {
-        "change_feed_orders": _CHANGE_FEED_ORDERS_ORACLE,
-        "change_feed_schema_evolution": (
-            _CHANGE_FEED_SCHEMA_EVOLUTION_ORACLE
-        ),
-        "dedup_ngram_containment": _ngram_containment_oracle(0.8),
-        "ivm_events_view": _IVM_EVENTS_VIEW_ORACLE,
-        "bpe_merge_table": _bpe_merge_oracle(BPE_NUM_MERGES),
-        "bpe_tokenize_stats": _bpe_tokenize_oracle(BPE_NUM_MERGES),
-        "unigram_vocab_table": _unigram_vocab_oracle(**UNIGRAM_PARAMS),
-        "unigram_tokenize_stats": _unigram_tokenize_oracle(
-            **UNIGRAM_PARAMS
-        ),
-        "quality_nb_model_score": _quality_nb_model_oracle(buckets=4096),
-        "nb_threshold_sweep": _nb_threshold_sweep_oracle(
-            4096, NB_SWEEP_THRESHOLDS
-        ),
-        "blocklist_filter": _blocklist_filter_oracle(
-            BLOCKLIST_WORDS, max_ppm=40000
-        ),
-        "remove_dup_spans": _remove_dup_spans_oracle(k=8, min_count=2),
-        "ann_pq_topk": _ann_certificate_oracle(),
-        "ann_ivfpq_topk": _ann_certificate_oracle(),
-        "split_leakage_safe": _split_leakage_safe_oracle(threshold=0.5),
-        "neardup_rate_by_source": _neardup_rate_by_source_oracle(threshold=0.5),
-        "scd2_asof_lookup": _SCD2_ASOF_LOOKUP_ORACLE.replace(
-            "{wm}", EVENTS_WATERMARK
-        ),
-        "star_join_asof": _STAR_JOIN_ASOF_ORACLE.replace(
-            "{wm}", EVENTS_WATERMARK
-        ),
-        "heavy_hitters": _heavy_hitters_oracle(min_count=850),
-        "neardup_triangles": _neardup_triangles_oracle(max_hamming=6),
-        "user_activity_gaps": _USER_GAPS_ORACLE,
-        "event_transitions": _EVENT_TRANSITIONS_ORACLE,
-        "conversion_latency": _CONVERSION_LATENCY_ORACLE,
-        "embedding_class_stats": _EMBEDDING_CLASS_STATS_ORACLE,
-        "knn_label_accuracy": _knn_label_accuracy_oracle(max_query_id=25),
-        # knn_label_accuracy_full (self-certifying since r7): BLAS float
-        # ranking is engine-specific; the query emits exact per-label
-        # counts + the GEMM-vs-exact-decimal slice agreement boolean
-        "knn_label_accuracy_full": _KNN_FULL_ORACLE,
-        "sentence_split": _SENTENCE_SPLIT_ORACLE,
-        "profile_docs": _profile_docs_oracle(),
-        "shard_corpus": _shard_corpus_oracle(n_shards=16),
-        "sample_weighted": _SAMPLE_WEIGHTED_ORACLE,
-        "funnel_analysis": _FUNNEL_ORACLE,
-        "funnel_one_pass": _FUNNEL_ORACLE,
-        "cohort_retention": _COHORT_RETENTION_ORACLE,
-        "metric_anomalies": _METRIC_ANOMALIES_ORACLE,
-        "gap_fill": _GAP_FILL_ORACLE,
-        "star_join": render_star_sql(STAR_SPECS),
-        "star_join_wide": render_star_sql(STAR_SPECS_WIDE),
-        "star_join_agg": STAR_AGG_SQL,
-        "pricing_summary": PRICING_SUMMARY_SQL,
-        "tpch_q3": TPCH_Q3_SQL,
-        "tpch_q10": TPCH_Q10_SQL,
-        "tpch_q18": TPCH_Q18_SQL,
-        "tpch_q4": TPCH_Q4_SQL,
-        "tpch_q5": TPCH_Q5_SQL,
-        "tpch_q12": TPCH_Q12_SQL,
-        "tpch_q16": TPCH_Q16_SQL,
-        "tpch_q22": TPCH_Q22_SQL,
-        "tpch_q2": TPCH_Q2_SQL,
-        "tpch_q6": TPCH_Q6_SQL,
-        "tpch_q7": TPCH_Q7_SQL,
-        "tpch_q8": TPCH_Q8_SQL,
-        "tpch_q9": TPCH_Q9_SQL,
-        "tpch_q11": TPCH_Q11_SQL,
-        "tpch_q13": TPCH_Q13_SQL,
-        "tpch_q14": TPCH_Q14_SQL,
-        "tpch_q15": TPCH_Q15_SQL,
-        "tpch_q17": TPCH_Q17_SQL,
-        "tpch_q19": TPCH_Q19_SQL,
-        "tpch_q20": TPCH_Q20_SQL,
-        "tpch_q21": TPCH_Q21_SQL,
-        "window_rank_suite": WINDOW_RANK_SUITE_SQL,
-        "rollup_agg": ROLLUP_SQL,
-        "cube_agg": CUBE_SQL,
-        "grouping_sets": GROUPING_SETS_SQL,
-        "value_histogram": VALUE_HISTOGRAM_SQL,
-        "percentile_summary": """
-            SELECT l_returnflag,
-                   round(quantile_cont(l_quantity, 0.25), 6) AS p25,
-                   round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-                   round(quantile_cont(l_quantity, 0.75), 6) AS p75
-            FROM lineitem GROUP BY l_returnflag
-        """,
-        "distinct_agg": DISTINCT_AGG_SQL,
-        # approx_distinct (self-certifying since r7): the HLL estimate
-        # is engine-specific, so the query emits exact counts + in-bound
-        # booleans; the oracle recomputes the exact side and expects true
-        "approx_distinct": _APPROX_DISTINCT_ORACLE,
-        "set_ops": SET_OPS_SQL,
-        # events.ts is parquet TIMESTAMP(NANOS); Spark reads it floored to
-        # microseconds, so the oracle casts to microsecond TIMESTAMP too.
-        "incremental_filter": (
-            "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type,"
-            " value, props FROM events"
-            f" WHERE CAST(ts AS TIMESTAMP) > TIMESTAMP '{EVENTS_WATERMARK}'"
-        ),
-        "bucketize_case_when": """
-            SELECT CASE WHEN l_quantity < 15 THEN 'low'
-                        WHEN l_quantity < 30 THEN 'medium'
-                        ELSE 'high' END AS quantity_flag,
-                   CAST(COUNT(*) AS BIGINT) AS n_rows
-            FROM lineitem GROUP BY 1
-        """,
-        "constant_injection": (
-            "SELECT n_nationkey, n_name, '1900-01-01' AS cdc FROM nation"
-        ),
-        "expectations_drop": (
-            "SELECT * FROM orders WHERE o_custkey IS NOT NULL AND o_totalprice > 0"
-        ),
-        "dedup_latest_per_key": """
+# SCD1 merge of (pre-cutoff latest) target + post-cutoff updates
+# reduces to latest-per-key over the whole change stream, so
+# scd1_upsert shares dedup_latest_per_key's oracle.
+_LATEST_PER_USER_ORACLE = """
             SELECT event_id, ts, user_id, event_type, value, props FROM (
                 SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
                        event_type, value, props,
@@ -5886,11 +5580,125 @@ def oracle_sql() -> dict[str, str]:
                     PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
                 FROM events
             ) WHERE rn = 1
-        """,
-        "scalar_max_watermark": (
-            "SELECT MAX(CAST(ts AS TIMESTAMP)) AS cdc FROM events"
-        ),
-        "email_validation": """
+        """
+
+#: The query catalog, each query declared once: ``queries()``,
+#: ``oracle_sql()`` and every tagged set are read from here. Order is
+#: the driver's: it oracle-checks the FIRST 50 entries each round, so a
+#: query enters that window by moving its entry. Entries past 50 are
+#: oracle-checked only by ``pytest -m slow`` (tests/test_oracle_parity.py
+#: at sf0.001 and sf0.01) and by ``python tests/parity.py``.
+REGISTRY: tuple[Query, ...] = (
+    # --- stale tier: last driver window r9 (33) ---
+    # ann_ivf_topk / ann_ivf_index_topk (self-certifying since r7):
+    # the approximate lists are engine-specific, so the queries emit
+    # recall certificates vs the in-engine brute-force twin; the
+    # oracle pins the query-id set, k-completeness, and `true`s
+    Query("ann_ivf_index_topk", q_ann_ivf_index_topk,
+          _ann_certificate_oracle(), ("plan_time_fit",)),
+    Query("ann_ivf_topk", q_ann_ivf_topk,
+          _ann_certificate_oracle(), ("heavy", "plan_time_fit")),
+    Query("ann_pq_topk", q_ann_pq_topk, _ann_certificate_oracle()),
+    Query("bm25_search", q_bm25_search,
+          _bm25_oracle(BM25_QUERY_TERMS, k=20, k1=1.2, b=0.75)),
+    Query("cap_per_source", q_cap_per_source, _cap_per_source_oracle(k=10)),
+    Query("chunk_documents", q_chunk_documents,
+          _chunk_documents_oracle(chunk_size=64, overlap=8)),
+    Query("contamination_check", q_contamination_check,
+          _contamination_oracle(n=5, test_mod=97)),
+    Query("corpus_curation", q_corpus_curation, f"""
+            SELECT s.doc_id, s.n_tokens, s.quality_score, s.lang_pred
+            FROM ({_text_stats_oracle()}) s
+            JOIN (
+                SELECT MIN(doc_id) AS doc_id
+                FROM documents GROUP BY md5({_NORM_TEXT})
+            ) r USING (doc_id)
+            WHERE s.quality_score >= 0.5 AND s.n_tokens >= 20
+        """),
+    Query("decontaminate", q_decontaminate,
+          _decontaminate_oracle(n=5, test_mod=97)),
+    Query("dedup_clusters", q_dedup_clusters,
+          _dedup_clusters_oracle(0.5), ("heavy",)),
+    Query("dedup_embedding_cosine", q_dedup_embedding_cosine,
+          _embedding_neardup_oracle(0.4), ("heavy",)),
+    Query("dedup_keep_best", q_dedup_keep_best, _dedup_keep_best_oracle(0.5)),
+    Query("gopher_quality", q_gopher_quality, _gopher_quality_oracle()),
+    Query("jl_project", q_jl_project, _jl_project_oracle(out_dim=8)),
+    Query("knn_label_accuracy", q_knn_label_accuracy,
+          _knn_label_accuracy_oracle(max_query_id=25)),
+    # knn_label_accuracy_full (self-certifying since r7): BLAS float
+    # ranking is engine-specific; the query emits exact per-label
+    # counts + the GEMM-vs-exact-decimal slice agreement boolean
+    Query("knn_label_accuracy_full", q_knn_label_accuracy_full,
+          _KNN_FULL_ORACLE),
+    Query("length_quantile_filter", q_length_quantile_filter,
+          _length_quantile_oracle(0.05, 0.95)),
+    Query("neardup_rate_by_source", q_neardup_rate_by_source,
+          _neardup_rate_by_source_oracle(threshold=0.5)),
+    Query("neardup_triangles", q_neardup_triangles,
+          _neardup_triangles_oracle(max_hamming=6)),
+    Query("ngram_lm_score", q_ngram_lm_score, _ngram_lm_oracle()),
+    Query("pack_sequences", q_pack_sequences,
+          _pack_sequences_oracle(budget=512, shards=32)),
+    Query("pagerank_central_docs", q_pagerank_central_docs,
+          _pagerank_cert_oracle(8), ("heavy", "plan_time_fit")),
+    # pca_project (self-certifying since r7): LAPACK/float scores
+    # are engine-specific; the query emits per-component certificates
+    # (exact n + eigenvalue/centering/orthonormality booleans)
+    Query("pca_project", q_pca_project, _PCA_PROJECT_ORACLE, ("heavy",)),
+    Query("quantize_embeddings", q_quantize_embeddings, _QUANTIZE_EMB_ORACLE),
+    Query("repetition_stats", q_repetition_stats, _repetition_oracle(n=3)),
+    Query("sample_exact_n", q_sample_exact_n, _SAMPLE_EXACT_N_ORACLE),
+    Query("sample_weighted", q_sample_weighted, _SAMPLE_WEIGHTED_ORACLE),
+    Query("shard_corpus", q_shard_corpus, _shard_corpus_oracle(n_shards=16)),
+    Query("source_mix", q_source_mix, _SOURCE_MIX_ORACLE),
+    Query("split_leakage_safe", q_split_leakage_safe,
+          _split_leakage_safe_oracle(threshold=0.5)),
+    Query("stratified_sample", q_stratified_sample,
+          _stratified_sample_oracle(en_pct=40)),
+    Query("strip_boilerplate", q_strip_boilerplate,
+          _strip_boilerplate_oracle(n=3, min_docs=2)),
+    Query("tfidf_top_terms", q_tfidf_top_terms, _tfidf_oracle(k=5)),
+    # --- r12-new (2) ---
+    Query("change_feed_schema_evolution", q_change_feed_schema_evolution,
+          _CHANGE_FEED_SCHEMA_EVOLUTION_ORACLE),
+    Query("dedup_ngram_containment", q_dedup_ngram_containment,
+          _ngram_containment_oracle(0.8)),
+    # --- r10-certified refills (15) ---
+    Query("funnel_one_pass", q_funnel_one_pass, _FUNNEL_ORACLE),
+    Query("ann_ivfpq_topk", q_ann_ivfpq_topk,
+          _ann_certificate_oracle(), ("plan_time_fit",)),
+    Query("ann_lsh_topk", q_ann_lsh_topk, _ann_certificate_oracle()),
+    # approx_distinct (self-certifying since r7): the HLL estimate
+    # is engine-specific, so the query emits exact counts + in-bound
+    # booleans; the oracle recomputes the exact side and expects true
+    Query("approx_distinct", q_approx_distinct, _APPROX_DISTINCT_ORACLE),
+    Query("asof_join", q_asof_join, _ASOF_ORACLE),
+    Query("blocklist_filter", q_blocklist_filter,
+          _blocklist_filter_oracle(BLOCKLIST_WORDS, max_ppm=40000)),
+    Query("bpe_merge_table", q_bpe_merge_table,
+          _bpe_merge_oracle(BPE_NUM_MERGES)),
+    Query("bpe_tokenize_stats", q_bpe_tokenize_stats,
+          _bpe_tokenize_oracle(BPE_NUM_MERGES)),
+    Query("bucketize_case_when", q_bucketize, """
+            SELECT CASE WHEN l_quantity < 15 THEN 'low'
+                        WHEN l_quantity < 30 THEN 'medium'
+                        ELSE 'high' END AS quantity_flag,
+                   CAST(COUNT(*) AS BIGINT) AS n_rows
+            FROM lineitem GROUP BY 1
+        """),
+    Query("cohort_retention", q_cohort_retention, _COHORT_RETENTION_ORACLE),
+    Query("constant_injection", q_constant_injection,
+          "SELECT n_nationkey, n_name, '1900-01-01' AS cdc FROM nation"),
+    Query("conversion_latency", q_conversion_latency,
+          _CONVERSION_LATENCY_ORACLE),
+    Query("date_dim", q_date_dim, DATE_DIM_ORACLE_SQL),
+    Query("doc_fingerprints", q_doc_fingerprints,
+          _kgram_fp_oracle(k=8, mod_p=8)),
+    Query("dup_span_stats", q_dup_span_stats,
+          _dup_span_stats_oracle(k=8, min_count=2)),
+    # --- position 51+: outside the driver window ---
+    Query("email_validation", q_email_validation, """
             SELECT c_custkey, email,
                    COALESCE(regexp_matches(email,
                        '^[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}$'),
@@ -5904,8 +5712,15 @@ def oracle_sql() -> dict[str, str]:
                             ELSE NULL END AS email
                 FROM customer
             )
-        """,
-        "topk_per_group": """
+        """),
+    # incremental merge must equal the full-history rebuild
+    Query("scd2_incremental", q_scd2_incremental,
+          _SCD2_ORACLE_SQL, ("headline",)),
+    Query("scd2_asof_lookup", q_scd2_asof_lookup,
+          _SCD2_ASOF_LOOKUP_ORACLE.replace("{wm}", EVENTS_WATERMARK)),
+    Query("dedup_latest_per_key", q_dedup_latest,
+          _LATEST_PER_USER_ORACLE, ("headline",)),
+    Query("topk_per_group", q_topk_per_group, """
             SELECT c_mktsegment, rank, o_orderkey, o_totalprice FROM (
                 SELECT c.c_mktsegment, o.o_orderkey, o.o_totalprice,
                        ROW_NUMBER() OVER (
@@ -5913,37 +5728,146 @@ def oracle_sql() -> dict[str, str]:
                            ORDER BY o.o_totalprice DESC, o.o_orderkey ASC) AS rank
                 FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
             ) WHERE rank <= 3
-        """,
-        "events_tumbling_window": """
+        """, ("headline",)),
+    Query("events_tumbling_window", q_events_tumbling, """
             SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
                    event_type,
                    CAST(COUNT(*) AS BIGINT) AS n_events,
                    CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
             FROM events
             GROUP BY 1, 2
-        """,
-        # SCD1 merge of (pre-cutoff latest) target + post-cutoff updates
-        # reduces to latest-per-key over the whole change stream.
-        "scd1_upsert": """
-            SELECT event_id, ts, user_id, event_type, value, props FROM (
-                SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
-                       event_type, value, props,
-                       ROW_NUMBER() OVER (
-                    PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-                FROM events
-            ) WHERE rn = 1
-        """,
-        "scd2_history": _SCD2_ORACLE_SQL,
-        # incremental merge must equal the full-history rebuild
-        "scd2_incremental": _SCD2_ORACLE_SQL,
-        "pivot_event_counts": _PIVOT_ORACLE,
-        "unpivot_metrics": _UNPIVOT_ORACLE,
-        "running_totals": RUNNING_TOTALS_SQL,
-        "json_extract_agg": _JSON_EXTRACT_ORACLE,
-        "asof_join": _ASOF_ORACLE,
-        "range_join": _RANGE_JOIN_ORACLE,
-        "events_sliding_window": _SLIDING_WINDOW_ORACLE,
-        "events_session_window": """
+        """, ("headline",)),
+    Query("running_totals", q_running_totals, RUNNING_TOTALS_SQL),
+    Query("window_rank_suite", q_window_rank_suite, WINDOW_RANK_SUITE_SQL),
+    Query("rollup_agg", q_rollup_agg, ROLLUP_SQL, ("headline",)),
+    Query("cube_agg", q_cube_agg, CUBE_SQL),
+    Query("grouping_sets", q_grouping_sets, GROUPING_SETS_SQL),
+    Query("distinct_agg", q_distinct_agg, DISTINCT_AGG_SQL),
+    Query("set_ops", q_set_ops, SET_OPS_SQL),
+    Query("pivot_event_counts", q_pivot_event_counts, _PIVOT_ORACLE),
+    Query("unpivot_metrics", q_unpivot_metrics, _UNPIVOT_ORACLE),
+    Query("value_histogram", q_value_histogram, VALUE_HISTOGRAM_SQL),
+    Query("percentile_summary", q_percentile_summary, """
+            SELECT l_returnflag,
+                   round(quantile_cont(l_quantity, 0.25), 6) AS p25,
+                   round(quantile_cont(l_quantity, 0.5), 6) AS p50,
+                   round(quantile_cont(l_quantity, 0.75), 6) AS p75
+            FROM lineitem GROUP BY l_returnflag
+        """),
+    # events.ts is parquet TIMESTAMP(NANOS); Spark reads it floored to
+    # microseconds, so the oracle casts to microsecond TIMESTAMP too.
+    Query("incremental_filter", q_incremental_filter,
+          "SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type,"
+          " value, props FROM events"
+          f" WHERE CAST(ts AS TIMESTAMP) > TIMESTAMP '{EVENTS_WATERMARK}'"),
+    Query("expectations_drop", q_expectations_drop,
+          "SELECT * FROM orders WHERE o_custkey IS NOT NULL"
+          " AND o_totalprice > 0"),
+    Query("tpch_q2", q_tpch_q2, TPCH_Q2_SQL),
+    Query("tpch_q3", q_tpch_q3, TPCH_Q3_SQL),
+    Query("tpch_q4", q_tpch_q4, TPCH_Q4_SQL),
+    Query("tpch_q5", q_tpch_q5, TPCH_Q5_SQL),
+    Query("tpch_q6", q_tpch_q6, TPCH_Q6_SQL),
+    Query("tpch_q7", q_tpch_q7, TPCH_Q7_SQL),
+    Query("tpch_q8", q_tpch_q8, TPCH_Q8_SQL),
+    Query("tpch_q9", q_tpch_q9, TPCH_Q9_SQL),
+    Query("tpch_q10", q_tpch_q10, TPCH_Q10_SQL),
+    Query("tpch_q11", q_tpch_q11, TPCH_Q11_SQL),
+    Query("tpch_q12", q_tpch_q12, TPCH_Q12_SQL),
+    Query("tpch_q13", q_tpch_q13, TPCH_Q13_SQL),
+    Query("tpch_q14", q_tpch_q14, TPCH_Q14_SQL),
+    Query("tpch_q15", q_tpch_q15, TPCH_Q15_SQL),
+    Query("tpch_q16", q_tpch_q16, TPCH_Q16_SQL),
+    Query("tpch_q17", q_tpch_q17, TPCH_Q17_SQL),
+    Query("tpch_q18", q_tpch_q18, TPCH_Q18_SQL),
+    Query("tpch_q19", q_tpch_q19, TPCH_Q19_SQL),
+    Query("tpch_q20", q_tpch_q20, TPCH_Q20_SQL),
+    Query("tpch_q21", q_tpch_q21, TPCH_Q21_SQL),
+    Query("tpch_q22", q_tpch_q22, TPCH_Q22_SQL),
+    Query("change_feed_orders", q_change_feed_orders,
+          _CHANGE_FEED_ORDERS_ORACLE),
+    Query("ivm_events_view", q_ivm_events_view, _IVM_EVENTS_VIEW_ORACLE),
+    Query("ann_cosine_topk", q_ann_cosine_topk,
+          _ann_topk_oracle(k=5, max_query_id=10), ("headline",)),
+    Query("dedup_exact", q_dedup_exact, f"""
+            SELECT md5({_NORM_TEXT}) AS text_hash,
+                   MIN(doc_id) AS rep_id,
+                   CAST(COUNT(*) AS BIGINT) AS group_size
+            FROM documents GROUP BY 1
+        """),
+    Query("dedup_minhash_lsh", q_dedup_minhash_lsh,
+          _minhash_lsh_oracle(16, 8, 0.5), ("headline", "heavy")),
+    Query("dedup_ngram_jaccard", q_dedup_ngram_jaccard,
+          _ngram_jaccard_oracle(0.5), ("heavy",)),
+    Query("simhash_fingerprints", q_simhash_fingerprints,
+          _simhash_fp_oracle(), ("heavy",)),
+    Query("simhash_neardup", q_simhash_neardup,
+          _simhash_neardup_oracle(8), ("headline", "heavy")),
+    Query("semantic_dedup", q_semantic_dedup,
+          _SEMANTIC_DEDUP_ORACLE, ("heavy",)),
+    Query("dsir_select", q_dsir_select,
+          _dsir_oracle(k=150, buckets=4096), ("heavy",)),
+    Query("heavy_hitters", q_heavy_hitters,
+          _heavy_hitters_oracle(min_count=850)),
+    Query("zorder_code", q_zorder_code, """
+            WITH s1 AS (SELECT MIN(l_partkey) mn, MAX(l_partkey) mx FROM lineitem),
+                 s2 AS (SELECT MIN(l_suppkey) mn, MAX(l_suppkey) mx FROM lineitem),
+                 b AS (
+                SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+                       CAST(floor(CAST((l_partkey - s1.mn) AS DOUBLE) * 65535.0 / CAST(greatest(s1.mx - s1.mn, 1) AS DOUBLE)) AS BIGINT) AS b1,
+                       CAST(floor(CAST((l_suppkey - s2.mn) AS DOUBLE) * 65535.0 / CAST(greatest(s2.mx - s2.mn, 1) AS DOUBLE)) AS BIGINT) AS b2
+                FROM lineitem, s1, s2
+            )
+            SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+                   CAST((((b1 >> 0) & 1) << 0) + (((b1 >> 1) & 1) << 2) + (((b1 >> 2) & 1) << 4) + (((b1 >> 3) & 1) << 6) + (((b1 >> 4) & 1) << 8) + (((b1 >> 5) & 1) << 10) + (((b1 >> 6) & 1) << 12) + (((b1 >> 7) & 1) << 14) + (((b1 >> 8) & 1) << 16) + (((b1 >> 9) & 1) << 18) + (((b1 >> 10) & 1) << 20) + (((b1 >> 11) & 1) << 22) + (((b1 >> 12) & 1) << 24) + (((b1 >> 13) & 1) << 26) + (((b1 >> 14) & 1) << 28) + (((b1 >> 15) & 1) << 30) + (((b2 >> 0) & 1) << 1) + (((b2 >> 1) & 1) << 3) + (((b2 >> 2) & 1) << 5) + (((b2 >> 3) & 1) << 7) + (((b2 >> 4) & 1) << 9) + (((b2 >> 5) & 1) << 11) + (((b2 >> 6) & 1) << 13) + (((b2 >> 7) & 1) << 15) + (((b2 >> 8) & 1) << 17) + (((b2 >> 9) & 1) << 19) + (((b2 >> 10) & 1) << 21) + (((b2 >> 11) & 1) << 23) + (((b2 >> 12) & 1) << 25) + (((b2 >> 13) & 1) << 27) + (((b2 >> 14) & 1) << 29) + (((b2 >> 15) & 1) << 31) AS BIGINT) AS zcode
+            FROM b
+        """),
+    Query("text_stats", q_text_stats, _text_stats_oracle(), ("headline",)),
+    Query("token_counts", q_token_counts, f"""
+            SELECT doc_id,
+                   CAST(len({_TOKS}) AS BIGINT) AS ws_tokens,
+                   CAST(len(regexp_extract_all(text,
+                        '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+')) AS BIGINT)
+                       AS bpe_ish_tokens
+            FROM documents
+        """),
+    Query("multimodal_features", q_multimodal_features, _MULTIMODAL_ORACLE),
+    Query("json_extract_agg", q_json_extract_agg, _JSON_EXTRACT_ORACLE),
+    Query("pii_redaction", q_pii_redaction, _pii_redaction_oracle()),
+    Query("scalar_max_watermark", q_scalar_max_watermark,
+          "SELECT MAX(CAST(ts AS TIMESTAMP)) AS cdc FROM events"),
+    Query("profile_docs", q_profile_docs, _profile_docs_oracle()),
+    Query("sentence_split", q_sentence_split, _SENTENCE_SPLIT_ORACLE),
+    Query("star_join_asof", q_star_join_asof,
+          _STAR_JOIN_ASOF_ORACLE.replace("{wm}", EVENTS_WATERMARK)),
+    Query("range_join", q_range_join, _RANGE_JOIN_ORACLE),
+    Query("funnel_analysis", q_funnel_analysis, _FUNNEL_ORACLE),
+    Query("metric_anomalies", q_metric_anomalies, _METRIC_ANOMALIES_ORACLE),
+    Query("gap_fill", q_gap_fill, _GAP_FILL_ORACLE),
+    Query("user_activity_gaps", q_user_activity_gaps, _USER_GAPS_ORACLE),
+    Query("event_transitions", q_event_transitions, _EVENT_TRANSITIONS_ORACLE),
+    Query("embedding_class_stats", q_embedding_class_stats,
+          _EMBEDDING_CLASS_STATS_ORACLE),
+    Query("event_attribution", q_event_attribution, """
+            WITH v AS (
+                SELECT event_id AS view_id, user_id,
+                       CAST(ts AS TIMESTAMP) AS vts
+                FROM events WHERE event_type = 'view'
+            ), c AS (
+                SELECT event_id AS click_id, user_id,
+                       CAST(ts AS TIMESTAMP) AS cts
+                FROM events WHERE event_type = 'click'
+            )
+            SELECT v.view_id, c.click_id, v.user_id AS user_id,
+                   CAST(epoch_us(c.cts) - epoch_us(v.vts) AS BIGINT)
+                       AS micros_between
+            FROM v JOIN c ON v.user_id = c.user_id
+            WHERE epoch_us(c.cts) > epoch_us(v.vts)
+              AND epoch_us(c.cts) <= epoch_us(v.vts) + 600000000
+        """, ("heavy",)),
+    Query("events_sliding_window", q_events_sliding_window,
+          _SLIDING_WINDOW_ORACLE),
+    Query("events_session_window", q_events_session_window, """
             WITH e AS (
                 SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events
             ), marked AS (
@@ -5965,106 +5889,44 @@ def oracle_sql() -> dict[str, str]:
                    MAX(ts) + INTERVAL 30 MINUTE AS session_end,
                    CAST(COUNT(*) AS BIGINT) AS n_events
             FROM sess GROUP BY user_id, sess_id
-        """,
-        "text_stats": _text_stats_oracle(),
-        "token_counts": f"""
-            SELECT doc_id,
-                   CAST(len({_TOKS}) AS BIGINT) AS ws_tokens,
-                   CAST(len(regexp_extract_all(text,
-                        '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+')) AS BIGINT)
-                       AS bpe_ish_tokens
-            FROM documents
-        """,
-        "corpus_curation": f"""
-            SELECT s.doc_id, s.n_tokens, s.quality_score, s.lang_pred
-            FROM ({_text_stats_oracle()}) s
-            JOIN (
-                SELECT MIN(doc_id) AS doc_id
-                FROM documents GROUP BY md5({_NORM_TEXT})
-            ) r USING (doc_id)
-            WHERE s.quality_score >= 0.5 AND s.n_tokens >= 20
-        """,
-        "dedup_exact": f"""
-            SELECT md5({_NORM_TEXT}) AS text_hash,
-                   MIN(doc_id) AS rep_id,
-                   CAST(COUNT(*) AS BIGINT) AS group_size
-            FROM documents GROUP BY 1
-        """,
-        "dedup_ngram_jaccard": _ngram_jaccard_oracle(0.5),
-        "dedup_clusters": _dedup_clusters_oracle(0.5),
-        "pii_redaction": _pii_redaction_oracle(),
-        "gopher_quality": _gopher_quality_oracle(),
-        "dedup_minhash_lsh": _minhash_lsh_oracle(16, 8, 0.5),
-        "simhash_fingerprints": _simhash_fp_oracle(),
-        "simhash_neardup": _simhash_neardup_oracle(8),
-        "pagerank_central_docs": _pagerank_cert_oracle(8),
-        "ann_cosine_topk": _ann_topk_oracle(k=5, max_query_id=10),
-        # ann_ivf_topk / ann_ivf_index_topk (self-certifying since r7):
-        # the approximate lists are engine-specific, so the queries emit
-        # recall certificates vs the in-engine brute-force twin; the
-        # oracle pins the query-id set, k-completeness, and `true`s
-        "ann_ivf_topk": _ann_certificate_oracle(),
-        "ann_ivf_index_topk": _ann_certificate_oracle(),
-        "dedup_embedding_cosine": _embedding_neardup_oracle(0.4),
-        "semantic_dedup": _SEMANTIC_DEDUP_ORACLE,
-        "doc_fingerprints": _kgram_fp_oracle(k=8, mod_p=8),
-        "multimodal_features": _MULTIMODAL_ORACLE,
-        "pack_sequences": _pack_sequences_oracle(budget=512, shards=32),
-        "contamination_check": _contamination_oracle(n=5, test_mod=97),
-        "decontaminate": _decontaminate_oracle(n=5, test_mod=97),
-        "dsir_select": _dsir_oracle(k=150, buckets=4096),
-        "quality_nb_score": _quality_nb_oracle(buckets=4096),
-        "temperature_mix": _temperature_mix_oracle(total_n=200, alpha=0.7),
-        "dup_span_stats": _dup_span_stats_oracle(k=8, min_count=2),
-        "substring_dup_spans": _substring_dup_spans_oracle(k=8, min_count=2),
-        "strip_boilerplate": _strip_boilerplate_oracle(n=3, min_docs=2),
-        "ngram_lm_score": _ngram_lm_oracle(),
-        "jl_project": _jl_project_oracle(out_dim=8),
-        # pca_project (self-certifying since r7): LAPACK/float scores
-        # are engine-specific; the query emits per-component certificates
-        # (exact n + eigenvalue/centering/orthonormality booleans)
-        "pca_project": _PCA_PROJECT_ORACLE,
-        "zorder_code": """
-            WITH s1 AS (SELECT MIN(l_partkey) mn, MAX(l_partkey) mx FROM lineitem),
-                 s2 AS (SELECT MIN(l_suppkey) mn, MAX(l_suppkey) mx FROM lineitem),
-                 b AS (
-                SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-                       CAST(floor(CAST((l_partkey - s1.mn) AS DOUBLE) * 65535.0 / CAST(greatest(s1.mx - s1.mn, 1) AS DOUBLE)) AS BIGINT) AS b1,
-                       CAST(floor(CAST((l_suppkey - s2.mn) AS DOUBLE) * 65535.0 / CAST(greatest(s2.mx - s2.mn, 1) AS DOUBLE)) AS BIGINT) AS b2
-                FROM lineitem, s1, s2
-            )
-            SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-                   CAST((((b1 >> 0) & 1) << 0) + (((b1 >> 1) & 1) << 2) + (((b1 >> 2) & 1) << 4) + (((b1 >> 3) & 1) << 6) + (((b1 >> 4) & 1) << 8) + (((b1 >> 5) & 1) << 10) + (((b1 >> 6) & 1) << 12) + (((b1 >> 7) & 1) << 14) + (((b1 >> 8) & 1) << 16) + (((b1 >> 9) & 1) << 18) + (((b1 >> 10) & 1) << 20) + (((b1 >> 11) & 1) << 22) + (((b1 >> 12) & 1) << 24) + (((b1 >> 13) & 1) << 26) + (((b1 >> 14) & 1) << 28) + (((b1 >> 15) & 1) << 30) + (((b2 >> 0) & 1) << 1) + (((b2 >> 1) & 1) << 3) + (((b2 >> 2) & 1) << 5) + (((b2 >> 3) & 1) << 7) + (((b2 >> 4) & 1) << 9) + (((b2 >> 5) & 1) << 11) + (((b2 >> 6) & 1) << 13) + (((b2 >> 7) & 1) << 15) + (((b2 >> 8) & 1) << 17) + (((b2 >> 9) & 1) << 19) + (((b2 >> 10) & 1) << 21) + (((b2 >> 11) & 1) << 23) + (((b2 >> 12) & 1) << 25) + (((b2 >> 13) & 1) << 27) + (((b2 >> 14) & 1) << 29) + (((b2 >> 15) & 1) << 31) AS BIGINT) AS zcode
-            FROM b
-        """,
-        "event_attribution": """
-            WITH v AS (
-                SELECT event_id AS view_id, user_id,
-                       CAST(ts AS TIMESTAMP) AS vts
-                FROM events WHERE event_type = 'view'
-            ), c AS (
-                SELECT event_id AS click_id, user_id,
-                       CAST(ts AS TIMESTAMP) AS cts
-                FROM events WHERE event_type = 'click'
-            )
-            SELECT v.view_id, c.click_id, v.user_id AS user_id,
-                   CAST(epoch_us(c.cts) - epoch_us(v.vts) AS BIGINT)
-                       AS micros_between
-            FROM v JOIN c ON v.user_id = c.user_id
-            WHERE epoch_us(c.cts) > epoch_us(v.vts)
-              AND epoch_us(c.cts) <= epoch_us(v.vts) + 600000000
-        """,
-        "repetition_stats": _repetition_oracle(n=3),
-        "stratified_sample": _stratified_sample_oracle(en_pct=40),
-        "length_quantile_filter": _length_quantile_oracle(0.05, 0.95),
-        "source_mix": _SOURCE_MIX_ORACLE,
-        "chunk_documents": _chunk_documents_oracle(chunk_size=64, overlap=8),
-        "cap_per_source": _cap_per_source_oracle(k=10),
-        "quantize_embeddings": _QUANTIZE_EMB_ORACLE,
-        "date_dim": DATE_DIM_ORACLE_SQL,
-        "ann_lsh_topk": _ann_certificate_oracle(),
-        "dedup_keep_best": _dedup_keep_best_oracle(0.5),
-        "sample_exact_n": _SAMPLE_EXACT_N_ORACLE,
-        "tfidf_top_terms": _tfidf_oracle(k=5),
-        "bm25_search": _bm25_oracle(BM25_QUERY_TERMS, k=20, k1=1.2, b=0.75),
-    }
+        """),
+    Query("unigram_vocab_table", q_unigram_vocab_table,
+          _unigram_vocab_oracle(**UNIGRAM_PARAMS)),
+    Query("unigram_tokenize_stats", q_unigram_tokenize_stats,
+          _unigram_tokenize_oracle(**UNIGRAM_PARAMS)),
+    Query("quality_nb_model_score", q_quality_nb_model_score,
+          _quality_nb_model_oracle(buckets=4096)),
+    Query("nb_threshold_sweep", q_nb_threshold_sweep,
+          _nb_threshold_sweep_oracle(4096, NB_SWEEP_THRESHOLDS), ("heavy",)),
+    Query("remove_dup_spans", q_remove_dup_spans,
+          _remove_dup_spans_oracle(k=8, min_count=2)),
+    Query("substring_dup_spans", q_substring_dup_spans,
+          _substring_dup_spans_oracle(k=8, min_count=2)),
+    Query("temperature_mix", q_temperature_mix,
+          _temperature_mix_oracle(total_n=200, alpha=0.7)),
+    Query("quality_nb_score", q_quality_nb_score,
+          _quality_nb_oracle(buckets=4096)),
+    Query("pricing_summary", q_pricing_summary,
+          PRICING_SUMMARY_SQL, ("headline",)),
+    Query("star_join", q_star_join,
+          render_star_sql(STAR_SPECS), ("headline",)),
+    Query("star_join_wide", q_star_join_wide,
+          render_star_sql(STAR_SPECS_WIDE), ("headline",)),
+    Query("star_join_agg", q_star_join_agg, STAR_AGG_SQL, ("headline",)),
+    Query("scd1_upsert", q_scd1_upsert,
+          _LATEST_PER_USER_ORACLE, ("headline",)),
+    Query("scd2_history", q_scd2_history, _SCD2_ORACLE_SQL, ("headline",)),
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {q.name: q.build for q in REGISTRY}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {q.name: q.oracle for q in REGISTRY}
+
+
+def tagged(tag: str) -> list[str]:
+    """Names of the entries carrying ``tag``, in registry order."""
+    return [q.name for q in REGISTRY if tag in q.tags]

@@ -21,13 +21,13 @@ The protocol below is what makes a BENCH_rN line interpretable:
   one-off), then N timed runs with `clearCache` between; the reported
   number is the MEDIAN, with IQR kept as the noise band. A delta
   smaller than the IQR is noise, not signal.
-- **Adaptive sample counts.** Sub-second queries (warm run < 1s) get
-  SPARK_GRAFT_BENCH_FAST_RUNS (default 5) samples — their relative
-  noise is largest; the variance-prone heavy dedup family gets
-  SPARK_GRAFT_BENCH_HEAVY_RUNS (default 5); everything else
-  SPARK_GRAFT_BENCH_RUNS (default 3).
+- **Adaptive sample counts.** Sub-second queries (first timed run
+  < 1s) get FAST_RUNS (5) samples — their relative noise is largest;
+  the registry entries tagged ``heavy`` (the variance-prone dedup and
+  long-warm-up family) get HEAVY_RUNS (5); everything else RUNS (3).
 - **Two totals, both printed.** ``value`` is the FIXED 15-query
-  headline (comparable since r1 — membership never changes);
+  headline — the registry entries tagged ``headline`` (comparable
+  since r1 — membership never changes);
   ``total_all_sec`` is the sum over every query measured this run (the
   shared-basis anchor — compare rounds on the intersection of their
   per-query maps via bench_compare.py, not on the headline alone).
@@ -57,27 +57,20 @@ from dataeng_azure_spotify_spark.session import get_spark
 
 import __spark_entry__ as entrymod
 
-#: FIXED headline workload — the reported "value" is the sum over THIS
-#: list only, so the metric stays comparable round over round even as
-#: queries() grows. Do not change membership between rounds; newly added
-#: queries still appear (timed) in the per-query map.
-HEADLINE = [
-    "star_join",
-    "star_join_wide",
-    "star_join_agg",
-    "pricing_summary",
-    "rollup_agg",
-    "dedup_latest_per_key",
-    "topk_per_group",
-    "events_tumbling_window",
-    "scd1_upsert",
-    "scd2_history",
-    "scd2_incremental",
-    "dedup_minhash_lsh",
-    "simhash_neardup",
-    "ann_cosine_topk",
-    "text_stats",
-]
+#: timed samples per query (see "Adaptive sample counts" above)
+RUNS = 3
+#: the variance-prone heavy family gets extra samples: identical-code
+#: rounds showed up to 4x per-query swings at 3 samples, which made
+#: round-over-round comparisons unfalsifiable for exactly these queries
+#: (r11 added the long-warmup family — iterative/multi-stage queries
+#: whose generated code + checkpoint page cache keep warming over
+#: several samples: pagerank 15.7 -> 9.7s monotonically over 6 samples
+#: on an idle host, so 3-sample medians carry the warmup tail as fake
+#: IQR)
+HEAVY_RUNS = 5
+#: sub-second queries carry the largest RELATIVE noise (r7 headline
+#: drift post-mortem): give them extra samples too
+FAST_RUNS = 5
 
 
 def _load1m() -> float:
@@ -122,9 +115,12 @@ def main() -> None:
     ticks_start = _cpu_ticks()
     spark = get_spark(app_name="bench")
     qs = entrymod.queries()
-    names = [n for n in HEADLINE if n in qs] + [
-        n for n in qs if n not in HEADLINE
-    ]
+    # the reported "value" sums the headline entries only, so the metric
+    # stays comparable round over round even as the catalog grows;
+    # they run first, in registry order
+    headline = entrymod.tagged("headline")
+    heavy = set(entrymod.tagged("heavy"))
+    names = headline + [n for n in qs if n not in headline]
     # SPARK_GRAFT_BENCH_QUERIES=a,b,c measures a subset — short steal
     # exposure for adjudications (r12); unknown names fail loudly. The
     # driver's per-round run never sets it. Subset runs cannot be a
@@ -148,24 +144,6 @@ def main() -> None:
     spark.range(1_000_000).groupBy((F.col("id") % 7).alias("g")).count().count()
     entrymod._cat(spark, sf_dir)
 
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # the variance-prone heavy family gets extra samples: identical-code
-    # rounds showed up to 4x per-query swings at 3 samples, which made
-    # round-over-round comparisons unfalsifiable for exactly these queries
-    heavy_runs = int(os.environ.get("SPARK_GRAFT_BENCH_HEAVY_RUNS", "5"))
-    # sub-second queries carry the largest RELATIVE noise (r7 headline
-    # drift post-mortem): give them extra samples too
-    fast_runs = int(os.environ.get("SPARK_GRAFT_BENCH_FAST_RUNS", "5"))
-    heavy = {"dedup_minhash_lsh", "simhash_neardup", "ann_ivf_topk",
-             "dedup_clusters", "simhash_fingerprints", "dedup_ngram_jaccard",
-             # r11: the long-warmup family — iterative/multi-stage
-             # queries whose generated code + checkpoint page cache keep
-             # warming over several samples (measured on an idle host:
-             # pagerank 15.7 -> 9.7s monotonically over 6 samples), so
-             # 3-sample medians carry the warmup tail as fake IQR
-             "pagerank_central_docs", "semantic_dedup",
-             "event_attribution", "nb_threshold_sweep", "dsir_select",
-             "dedup_embedding_cosine", "pca_project"}
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     steal_q: dict[str, float] = {}
@@ -188,11 +166,11 @@ def main() -> None:
         fn(spark, sf_dir).count()
         samples.append(time.perf_counter() - t0)
         if name in heavy:
-            n_samples = heavy_runs
+            n_samples = HEAVY_RUNS
         elif samples[0] < 1.0:
-            n_samples = max(runs, fast_runs)
+            n_samples = max(RUNS, FAST_RUNS)
         else:
-            n_samples = runs
+            n_samples = RUNS
         for _ in range(n_samples - 1):
             spark.catalog.clearCache()
             t0 = time.perf_counter()
@@ -220,7 +198,7 @@ def main() -> None:
         # steal is host-attributed without a separate A/B
         steal_q[name] = _steal_pct(q_ticks, _cpu_ticks())
 
-    total = round(sum(timings[n] for n in HEADLINE if n in timings), 4)
+    total = round(sum(timings[n] for n in headline if n in timings), 4)
     total_all = round(sum(timings.values()), 4)
     load_end = _load1m()
     ticks_end = _cpu_ticks()
@@ -242,9 +220,9 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "runs": runs,
-        "heavy_runs": heavy_runs,
-        "fast_runs": fast_runs,
+        "runs": RUNS,
+        "heavy_runs": HEAVY_RUNS,
+        "fast_runs": FAST_RUNS,
         "agg": "median",
         "iqr": spreads,
         "load_1m": [load_start, load_end],
@@ -301,9 +279,9 @@ def main() -> None:
         "total_all_sec": total_all,
         "unit": "sec",
         "sf": full["sf"],
-        "runs": runs,
-        "heavy_runs": heavy_runs,
-        "fast_runs": fast_runs,
+        "runs": RUNS,
+        "heavy_runs": HEAVY_RUNS,
+        "fast_runs": FAST_RUNS,
         "agg": "median",
         "load_1m": [load_start, load_end],
         "steal_pct": steal_pct,

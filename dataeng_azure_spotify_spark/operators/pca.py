@@ -22,8 +22,9 @@ Scale design:
 Determinism: the sufficient statistics are float64 sums whose partition
 order can vary, so PCA is NOT bit-reproducible across cluster layouts
 (unlike the hash-derived JL projection) — it is covered by property
-tests (orthonormality, variance ordering, reconstruction) rather than a
-SQL oracle, and the driver treats its query as rows-only. Component
+tests (orthonormality, variance ordering, reconstruction), and its
+driver query emits per-component certificates that a SQL oracle checks
+instead of the raw scores. Component
 SIGN is fixed deterministically (largest-|loading| coordinate made
 positive) so repeated fits on identical partitioning agree exactly.
 """

@@ -661,7 +661,8 @@ def cosine_1nn_gemm(
     exact-decimal :func:`cosine_topk` ranking on a shared slice is
     pinned in tests; cross-engine bit-reproducibility is NOT part of
     this operator's contract (BLAS reassociation), which is why its
-    driver check is rows-only. Cite: the eval-scale gap called out in
+    driver query emits exact counts and an agreement boolean instead of
+    the ranked lists. Cite: the eval-scale gap called out in
     round-5 review of the 25-query exact slice (knn_label_accuracy).
     """
     import math

@@ -1,9 +1,9 @@
 """Generate docs/API.md: the query catalog with file:line links.
 
 Maps every ``queries()`` entry of the driver contract to its wrapper
-location, the engine functions it exercises (discovered by scanning the
-wrapper source for names defined in the package modules), and its
-correctness-check mode. Run from the repo root:
+location and the engine functions it exercises (discovered by scanning
+the wrapper source for names defined in the package modules). Run from
+the repo root:
 
     python docs/gen_api.py > docs/API.md
 """
@@ -45,7 +45,6 @@ def main() -> None:
     import __spark_entry__ as entry
 
     qs = entry.queries()
-    oracles = entry.oracle_sql()
     funcs = module_functions()
 
     rows = []
@@ -60,25 +59,22 @@ def main() -> None:
         names = set(getattr(fn, "__code__", None).co_names if callable(fn) else [])
         called = sorted(names & set(funcs))
         impl = ", ".join(f"{c} ({funcs[c]})" for c in called) or "inline DataFrame/SQL"
-        oracle = "DuckDB SQL" if qname in oracles else "rows-only"
-        rows.append((qname, f"`__spark_entry__.py:{line}`", impl, oracle))
+        rows.append((qname, f"`__spark_entry__.py:{line}`", impl))
 
     out = io.StringIO()
     out.write("# Query catalog\n\n")
     out.write(
-        "Every `queries()` entry of the driver contract, where it lives, which\n"
-        "engine functions it exercises, and how it is correctness-checked\n"
-        "(DuckDB SQL twin hashed by the driver, or rows-only for ops that are\n"
-        "approximate / engine-specific by design). Generated from the code —\n"
-        "regenerate with `python docs/gen_api.py > docs/API.md` after adding\n"
-        "a query. Order matches `queries()` (the first 50 are the driver's\n"
-        "per-round correctness window).\n\n"
+        "Every `queries()` entry of the driver contract, where it lives and\n"
+        "which engine functions it exercises. Every entry has a DuckDB SQL\n"
+        "twin in `oracle_sql()`. Generated from the code — regenerate with\n"
+        "`python docs/gen_api.py > docs/API.md` after adding a query. Order\n"
+        "matches `queries()` (the first 50 are the driver's per-round\n"
+        "correctness window).\n\n"
     )
-    n_sql = sum(1 for r in rows if r[3] == "DuckDB SQL")
-    out.write(f"{len(rows)} queries, {n_sql} with SQL oracles.\n\n")
-    out.write("| # | query | entry | engine functions | oracle |\n|---|---|---|---|---|\n")
+    out.write(f"{len(rows)} queries.\n\n")
+    out.write("| # | query | entry | engine functions |\n|---|---|---|---|\n")
     for i, r in enumerate(rows, 1):
-        out.write(f"| {i} | `{r[0]}` | {r[1]} | {r[2]} | {r[3]} |\n")
+        out.write(f"| {i} | `{r[0]}` | {r[1]} | {r[2]} |\n")
     sys.stdout.write(out.getvalue())
 
 

@@ -10,19 +10,15 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from plan_shapes import SKIP, shape, snapshot_session  # noqa: E402
+from plan_shapes import shape, snapshot_queries, snapshot_session  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 
 
 def main() -> None:
-    import __spark_entry__ as entry
-
     spark = snapshot_session(tempfile.mkdtemp(prefix="plansnap-wh-"))
     out = {}
-    for name, fn in entry.queries().items():
-        if name in SKIP:
-            continue
+    for name, fn in snapshot_queries().items():
         # cache isolation: a neighbor query's persist() would otherwise
         # surface as InMemoryRelation in THIS query's plan
         spark.catalog.clearCache()

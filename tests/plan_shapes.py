@@ -18,17 +18,20 @@ and commit the diff — the diff itself is the review artifact.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
-#: queries whose wrappers do heavyweight driver-side work at plan-build
-#: time (k-means fits, index builds) — excluded to keep generation fast;
-#: their plans are covered by dedicated tests in test_plans.py /
-#: test_llm_ops.py
-SKIP = {
-    "ann_ivf_topk",
-    "ann_ivf_index_topk",
-    "ann_ivfpq_topk",
-    "pagerank_central_docs",
-}
+
+def snapshot_queries() -> dict[str, Callable]:
+    """name -> wrapper for every query with a plan snapshot.
+
+    Entries tagged ``plan_time_fit`` do heavyweight driver-side work at
+    plan-build time (k-means fits, index builds) — excluded to keep
+    generation fast; their plans are covered by dedicated tests in
+    test_plans.py / test_llm_ops.py."""
+    import __spark_entry__ as entry
+
+    skip = set(entry.tagged("plan_time_fit"))
+    return {n: fn for n, fn in entry.queries().items() if n not in skip}
 
 
 def shape(plan: str) -> dict[str, int]:

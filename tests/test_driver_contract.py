@@ -11,14 +11,17 @@ getOrCreate() would just return the tuned session.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 import pytest
 
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _SCRIPT = """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 spark = SparkSession.builder.master("local[4]").getOrCreate()
 import __spark_entry__ as m
@@ -42,7 +45,7 @@ print("DRIVER_CONTRACT_OK")
 @pytest.mark.slow
 def test_plain_session_driver_contract():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, _ROOT],
         capture_output=True,
         text=True,
         timeout=600,

@@ -1,8 +1,6 @@
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
+from collections import Counter
 
 import __spark_entry__ as entrymod
 
@@ -14,9 +12,25 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"mktsegment", "orderstatus", "n_items", "revenue"}
 
 
-def test_queries_and_oracles_align(spark):
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    assert qs, "queries() must not be empty"
-    # every oracle key must have a query
-    assert set(oracles).issubset(set(qs))
+def test_queries_and_oracles_align():
+    # a dict literal keeps the last of two equal keys silently; in the
+    # registry tuple a duplicate would shadow an entry in queries() and
+    # oracle_sql() instead
+    names = [q.name for q in entrymod.REGISTRY]
+    dups = [n for n, c in Counter(names).items() if c > 1]
+    assert not dups, dups
+    assert list(entrymod.queries()) == names
+    assert list(entrymod.oracle_sql()) == names
+    assert all(q.oracle.strip() for q in entrymod.REGISTRY)
+
+
+def test_registry_tags_are_read_somewhere():
+    # headline/heavy: bench.py sample classes and headline total;
+    # plan_time_fit: tests/plan_shapes.py snapshot skip set
+    tags = {t for q in entrymod.REGISTRY for t in q.tags}
+    assert tags <= {"headline", "heavy", "plan_time_fit"}, tags
+
+
+def test_headline_membership_fixed():
+    # the headline total is the cross-round metric: 15 queries since r1
+    assert len(entrymod.tagged("headline")) == 15

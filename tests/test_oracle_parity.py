@@ -5,11 +5,7 @@ Runs at sf0.001 for speed; the driver runs the same comparison at sf0.01.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
 from tests.parity import compare_query
@@ -26,7 +22,7 @@ def test_oracle_parity(spark, name):
     # verify window, and the driver certifies oracle parity itself
     # (t2) every round; `python tests/parity.py` stays the manual form
     fn = entrymod.queries()[name]
-    sql = entrymod.oracle_sql().get(name)
+    sql = entrymod.oracle_sql()[name]
     problems = compare_query(spark, name, fn, sql, SF)
     assert not problems, "\n".join(problems)
 
@@ -41,6 +37,6 @@ def test_oracle_parity_sf01(spark, name):
     failures like the r4 quantize_embeddings class manifest (the
     sf0.001 sweep above masked exactly that one)."""
     fn = entrymod.queries()[name]
-    sql = entrymod.oracle_sql().get(name)
+    sql = entrymod.oracle_sql()[name]
     problems = compare_query(spark, name, fn, sql, "/root/testdata/sf0.01")
     assert not problems, "\n".join(problems)

@@ -13,7 +13,7 @@ import os
 import pytest
 
 import __spark_entry__ as entry
-from tests.plan_shapes import SKIP, shape
+from tests.plan_shapes import shape, snapshot_queries
 
 SF = "/root/testdata/sf0.001"
 _SNAP_PATH = os.path.join(os.path.dirname(__file__), "plan_snapshots.json")
@@ -23,8 +23,7 @@ with open(_SNAP_PATH) as f:
 
 
 def test_snapshot_covers_every_query():
-    expected = set(entry.queries()) - SKIP
-    assert set(SNAPSHOTS) == expected, (
+    assert set(SNAPSHOTS) == set(snapshot_queries()), (
         "plan_snapshots.json out of sync with queries() — regenerate: "
         "python tests/gen_plan_snapshots.py"
     )
