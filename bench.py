@@ -13,9 +13,11 @@ The protocol below is what makes a BENCH_rN line interpretable:
 - **Fresh process per invocation.** Run ``python bench.py`` as its own
   process (the driver already does); never reuse a warm session across
   "runs" you intend to compare — JIT state and GC history leak.
-- **Host load is recorded** (`load_1m` at start/end, plus cpu count)
-  in both outputs. A round-over-round comparison where either side ran
-  at elevated load is void — rerun it, don't adjudicate it.
+- **Host load is recorded** (`load_1m` at start/end) in both outputs;
+  the detail file adds the session's ``defaultParallelism`` and
+  ``spark.sql.shuffle.partitions``. A round-over-round comparison where
+  either side ran at elevated load is void — rerun it, don't
+  adjudicate it.
 - **Warm medians only.** Each query gets one untimed warm execution
   (whole-stage-codegen compiles per-query generated code — a 4-6×
   one-off), then N timed runs with `clearCache` between; the reported
@@ -226,7 +228,10 @@ def main() -> None:
         "agg": "median",
         "iqr": spreads,
         "load_1m": [load_start, load_end],
-        "cpus": os.cpu_count(),
+        # the parallelism plans were built with, not the host's cpu
+        # count: shuffle widths follow the session's cores
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
         "steal": steal,
         "steal_pct_per_query": steal_q,
     }

@@ -33,8 +33,10 @@ def is_valid_email_col(col: Column | str) -> Column:
     return F.coalesce(c.rlike(EMAIL_REGEX), F.lit(False))
 
 
+# no type hints: returnType fixes the type, and hints make PySpark try
+# to infer a pandas-UDF eval type and warn on every import
 @F.udf(returnType=BooleanType())
-def is_valid_email_udf(email: str | None) -> bool:
+def is_valid_email_udf(email):
     """Row-at-a-time Python UDF, literal port of the reference semantics."""
     if email is None:
         return False

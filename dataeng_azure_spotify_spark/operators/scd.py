@@ -18,9 +18,10 @@ over the key partitions), so Catalyst plans it as ONE shuffle on the
 business key followed by per-partition sorting — no driver-side loops.
 At scale:
 
-- SCD1 merge shuffles only ``target ∪ updates`` on the key; with a
-  key-bucketed target table the shuffle disappears entirely (both sides
-  co-partitioned).
+- SCD1 merge shuffles ``target ∪ updates`` on the key. The gold CDC
+  flow passes as ``target`` only the rows whose key the batch touches
+  (a broadcast semi join, ``ParquetSnapshotTable.merge_keys``), so a
+  micro-batch of K changed keys shuffles O(K) rows, not the table.
 - SCD2 incremental touches only *affected* keys (semi/anti join split),
   so a micro-batch of K changed keys rewrites O(K·versions) rows, not the
   whole dimension. On Delta-capable clusters the same logic drops into

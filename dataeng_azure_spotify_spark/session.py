@@ -15,20 +15,29 @@ this module is where the engine-level tuning lives:
   transfer beats row-at-a-time Python by 10-100×).
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   across the correctness oracle (DuckDB) and the cluster.
+- Shuffle partitions sized to the local master's cores: one task per core
+  per shuffle stage. AQE coalesces batch shuffles anyway, but never
+  streaming state, which keeps one state-store partition per shuffle
+  partition on every trigger.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 from dataeng_azure_spotify_spark.delta_support import delta_session_confs
 
-#: Default shuffle partitions per core on local mode. On a real cluster this
-#: is overridden to ~2-3× total executor cores (or left to AQE's
-#: coalescePartitions with a high initial value).
-_DEFAULT_SHUFFLE_PARTITIONS = 32
+#: Shuffle partitions on a non-local master. Executors may not have
+#: registered when the session starts (``defaultParallelism`` can read 2),
+#: so the count is fixed and AQE's coalescePartitions trims it per stage;
+#: size it to ~2-3x total executor cores through ``shuffle_partitions``.
+_CLUSTER_SHUFFLE_PARTITIONS = 32
+
+#: ``local``, ``local[N]``, ``local[*]``, ``local[N,F]`` — not ``local-cluster``
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 
 
 def get_spark(
@@ -42,17 +51,19 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (driver contract)
     falling back to ``local[*]``. On a real cluster the caller passes
     ``master=None`` with an externally-configured session instead.
+
+    ``shuffle_partitions`` defaults to the session's core count on a
+    local master (``defaultParallelism``: N for ``local[N]``, the JVM's
+    cores for ``local[*]``) and to 32 elsewhere. A streaming query keeps
+    the count its checkpoint was started with: Spark restores it from
+    the offset log.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
-    sp = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", _DEFAULT_SHUFFLE_PARTITIONS)
-    )
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -82,4 +93,12 @@ def get_spark(
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        sc = spark.sparkContext
+        local = _LOCAL_MASTER.fullmatch(sc.master)
+        shuffle_partitions = (
+            sc.defaultParallelism if local else _CLUSTER_SHUFFLE_PARTITIONS
+        )
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return spark

@@ -10,6 +10,13 @@ stream whose ``foreachBatch`` body applies the SCD merge
         merged  = apply_scd1|apply_scd2(target, batch, keys, sequence_by)
         atomically replace gold snapshot with merged
 
+An SCD1 commit is O(changes) in shuffle and compute: the snapshot splits
+by the batch's keys (broadcast semi/anti join, no shuffle), the merge and
+the change-feed diff run on the touched slice only, and the untouched
+rest is copied into the new snapshot as is
+(:meth:`ParquetSnapshotTable.merge_keys`). The write itself is still a
+full snapshot: a parquet directory cannot be patched in place.
+
 On Delta-capable clusters the body becomes ``DeltaTable.merge`` (SCD1:
 ``whenMatchedUpdateAll(condition='s.seq >= t.seq')``; SCD2: close + insert
 version rows) and the snapshot swap disappears. Here the snapshot is a
@@ -24,10 +31,12 @@ where DLT enforces them (reference ``DimUser.py:91-94``).
 
 from __future__ import annotations
 
+import operator
 import os
 import uuid
 from dataclasses import dataclass, field
-from typing import Mapping
+from functools import reduce
+from typing import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -267,48 +276,47 @@ class ParquetSnapshotTable:
 
     @staticmethod
     def _diff(old: DataFrame, new: DataFrame, keys: "list[str]", version: int) -> DataFrame:
-        """CDF rows for one version pair: one full-outer key join,
-        O(|old| + |new|) shuffle, nothing pairwise."""
-        cols = old.columns
-        val_cols = [c for c in cols if c not in keys]
-        o = old.select(
-            *[F.col(k) for k in keys],
-            F.struct(*val_cols).alias("__o") if val_cols
-            else F.lit(None).alias("__o"),
-            F.lit(True).alias("__in_o"),
-        )
-        n_ = new.select(
-            *[F.col(k) for k in keys],
-            F.struct(*val_cols).alias("__n") if val_cols
-            else F.lit(None).alias("__n"),
-            F.lit(True).alias("__in_n"),
-        )
-        j = o.join(n_, keys, "full_outer")
-        ver = F.lit(int(version)).cast("long").alias("_commit_version")
+        """CDF rows for one version pair: one full-outer key join read
+        once, O(|old| + |new|) shuffle, nothing pairwise. Keys match
+        NULL-safely, as in ``apply_scd1``'s window and the Delta
+        MERGE's ``<=>``: an unchanged NULL-key row emits nothing, a
+        changed one an update pair."""
+        val_cols = [c for c in old.columns if c not in keys]
 
-        def _emit(struct_col: str, ctype: str):
-            sel = [F.col(k) for k in keys]
-            sel += [F.col(f"{struct_col}.{c}").alias(c) for c in val_cols]
-            sel += [F.lit(ctype).alias("_change_type"), ver]
-            return sel
+        def _side(df: DataFrame, tag: str) -> DataFrame:
+            return df.select(
+                *[F.col(k).alias(f"__{tag}_{k}") for k in keys],
+                F.struct(*val_cols).alias(f"__{tag}") if val_cols
+                else F.lit(None).alias(f"__{tag}"),
+                F.lit(True).alias(f"__in_{tag}"),
+            )
 
-        inserts = j.filter(F.col("__in_o").isNull()).select(
-            *_emit("__n", "insert")
+        j = _side(old, "o").join(
+            _side(new, "n"),
+            _null_safe_eq([f"__o_{k}" for k in keys], [f"__n_{k}" for k in keys]),
+            "full_outer",
         )
-        deletes = j.filter(F.col("__in_n").isNull()).select(
-            *_emit("__o", "delete")
+
+        def _row(tag: str, ctype: str):
+            return F.struct(
+                *[F.col(f"__{tag}_{k}").alias(k) for k in keys],
+                *[F.col(f"__{tag}.{c}").alias(c) for c in val_cols],
+                F.lit(ctype).alias("_change_type"),
+            )
+
+        # one pass over the join: each key emits its 0, 1 or 2 rows
+        rows = (
+            F.when(F.col("__in_o").isNull(), F.array(_row("n", "insert")))
+            .when(F.col("__in_n").isNull(), F.array(_row("o", "delete")))
+            .when(
+                ~F.col("__o").eqNullSafe(F.col("__n")),
+                F.array(
+                    _row("o", "update_preimage"), _row("n", "update_postimage")
+                ),
+            )
         )
-        changed = j.filter(
-            F.col("__in_o").isNotNull()
-            & F.col("__in_n").isNotNull()
-            & ~F.col("__o").eqNullSafe(F.col("__n"))
-        )
-        pre = changed.select(*_emit("__o", "update_preimage"))
-        post = changed.select(*_emit("__n", "update_postimage"))
-        return (
-            inserts.unionByName(deletes)
-            .unionByName(pre)
-            .unionByName(post)
+        return j.select(F.explode(rows).alias("__c")).select(
+            "__c.*", F.lit(int(version)).cast("long").alias("_commit_version")
         )
 
     @staticmethod
@@ -387,23 +395,7 @@ class ParquetSnapshotTable:
         is removed — ``change_feed`` must never serve a failed
         attempt's stale diff for a committed version.
         """
-        live = self._live()
-        live_n = self._snap_n(live) if live else None
-        if live_n is None:
-            # fresh table, or live pointer is a legacy unversioned name:
-            # resume numbering above any versioned directory on disk
-            existing = [
-                n
-                for n in (
-                    self._snap_n(d)
-                    for d in self.fs.listdir(self.base)
-                    if d.startswith("snap-")
-                )
-                if n is not None
-            ]
-            live_n = max(existing) if existing else -1
-        next_n = live_n + 1
-        snap = f"snap-{next_n:08d}-{uuid.uuid4().hex[:12]}"
+        live, live_n, next_n, snap = self._next_version()
         path = os.path.join(self.base, snap)
         df.write.mode("overwrite").parquet(path)
         wrote_partial = False
@@ -437,6 +429,83 @@ class ParquetSnapshotTable:
                 # row is deleted regardless of key multiplicity)
                 self._write_schema_change_partial(old, new, next_n)
                 wrote_partial = True
+        self._commit(snap, next_n, wrote_partial)
+
+    def merge_keys(
+        self,
+        touched: DataFrame,
+        merge: "Callable[[DataFrame | None], DataFrame]",
+    ) -> None:
+        """Commit a keyed merge that rewrites only the rows whose
+        ``cdf_keys`` appear in ``touched``: O(changes) shuffle and
+        compute, where merging the whole snapshot and committing it
+        with :meth:`overwrite` shuffles every row three times (merge,
+        key check, diff).
+
+        The live snapshot splits NULL-safely into ``before`` (rows
+        whose key is touched) and ``rest`` with broadcast semi/anti
+        joins. ``merge(before)`` must return rows keyed within
+        ``touched`` only; the new version is ``rest ∪ merge(before)``.
+        Its change partial is the diff of ``before`` against the
+        touched rows read back from the written snapshot (what was
+        committed, even where ``merge`` breaks ties arbitrarily) —
+        equal to the full-snapshot diff, because ``rest`` passes
+        through unchanged. Key uniqueness is checked on that slice
+        before the repoint: ``rest`` is a subset of a validated
+        snapshot and key-disjoint from the slice. An old side with no
+        committed partial is validated in full once, as in
+        :meth:`overwrite`. With no live snapshot, ``merge(None)``
+        becomes the initial version through :meth:`overwrite`."""
+        keys = self.cdf_keys
+        if not keys:
+            raise ValueError("merge_keys: the table has no cdf_keys")
+        live, live_n, next_n, snap = self._next_version()
+        if live is None:
+            self.overwrite(merge(None))
+            return
+        old = self.spark.read.parquet(os.path.join(self.base, live))
+        if self._change_partial(live_n) is None:
+            self._check_unique_keys(old, keys, f"version {live_n}")
+        before = _match_keys(old, touched, keys, "left_semi")
+        rest = _match_keys(old, touched, keys, "left_anti")
+        path = os.path.join(self.base, snap)
+        rest.unionByName(merge(before)).write.mode("overwrite").parquet(path)
+        new = self.spark.read.parquet(path)
+        after = _match_keys(new, touched, keys, "left_semi")
+        self._check_unique_keys(after, keys, f"version {next_n}")
+        if self._schema_changed(old, new):
+            self._write_schema_change_partial(old, new, next_n)
+        else:
+            self._diff(before, after, keys, next_n).write.mode(
+                "overwrite"
+            ).parquet(self._changes_dir(next_n))
+        self._commit(snap, next_n, wrote_partial=True)
+
+    def _next_version(self) -> "tuple[str | None, int, int, str]":
+        """(live snapshot name or None, its version, the next version,
+        a fresh snapshot name for it)."""
+        live = self._live()
+        live_n = self._snap_n(live) if live else None
+        if live_n is None:
+            # fresh table, or live pointer is a legacy unversioned name:
+            # resume numbering above any versioned directory on disk
+            existing = [
+                n
+                for n in (
+                    self._snap_n(d)
+                    for d in self.fs.listdir(self.base)
+                    if d.startswith("snap-")
+                )
+                if n is not None
+            ]
+            live_n = max(existing) if existing else -1
+        next_n = live_n + 1
+        return live, live_n, next_n, f"snap-{next_n:08d}-{uuid.uuid4().hex[:12]}"
+
+    def _commit(self, snap: str, next_n: int, wrote_partial: bool) -> None:
+        """The commit tail shared by :meth:`overwrite` and
+        :meth:`merge_keys`: clear what crashed attempts at ``next_n``
+        left, then repoint to ``snap``."""
         if not wrote_partial:
             # no partial belongs to this version: remove any committed
             # one a crashed prior attempt left behind (the retry would
@@ -630,6 +699,28 @@ class ParquetSnapshotTable:
         return out
 
 
+def _null_safe_eq(left: "list[str]", right: "list[str]"):
+    """``left[i] <=> right[i]`` for every i, ANDed: the join condition
+    under which a NULL key matches a NULL key."""
+    return reduce(
+        operator.and_,
+        [F.col(a).eqNullSafe(F.col(b)) for a, b in zip(left, right)],
+    )
+
+
+def _match_keys(df: DataFrame, touched: DataFrame, keys: "list[str]", how: str) -> DataFrame:
+    """``df``'s rows whose ``keys`` do (``left_semi``) or do not
+    (``left_anti``) occur in ``touched``, matched NULL-safely through a
+    broadcast of ``touched``'s keys (duplicates there are harmless to a
+    semi/anti join)."""
+    probe = touched.select(*[F.col(k).alias(f"__t_{k}") for k in keys])
+    return df.join(
+        F.broadcast(probe),
+        _null_safe_eq(keys, [f"__t_{k}" for k in keys]),
+        how,
+    )
+
+
 class DeltaSnapshotTable:
     """Delta-backed twin of :class:`ParquetSnapshotTable` (same surface:
     read/exists/overwrite/history/read_version/vacuum) for clusters where
@@ -821,6 +912,9 @@ class CdcFlow:
         SCD2 computes the affected-keys rebuild with :func:`apply_scd2`
         and lands it as a versioned Delta overwrite (compute is still
         O(touched keys); Delta's log supplies atomicity + time travel).
+        On the parquet backend SCD1 commits through
+        :meth:`ParquetSnapshotTable.merge_keys`, which merges and diffs
+        only the rows of the batch's keys.
         """
         if self.expectations:
             batch = expectations_drop(batch, self.expectations)
@@ -828,14 +922,17 @@ class CdcFlow:
             self._merge_delta_scd1(spark, batch)
             return
         table = self.table(spark)
-        target = table.read()
         if self.scd_type == 1:
-            merged = apply_scd1(
-                target, batch, self.keys, self.sequence_by, self.tiebreakers
+            table.merge_keys(
+                batch.select(*self.keys),
+                lambda before: apply_scd1(
+                    before, batch, self.keys, self.sequence_by, self.tiebreakers
+                ),
             )
-        else:
-            merged = apply_scd2(
-                target,
+            return
+        table.overwrite(
+            apply_scd2(
+                table.read(),
                 batch,
                 self.keys,
                 self.sequence_by,
@@ -843,7 +940,7 @@ class CdcFlow:
                 self.drop_unchanged,
                 self._tracked_cols(batch),
             )
-        table.overwrite(merged)
+        )
 
     def _merge_delta_scd1(
         self, spark: SparkSession, batch: DataFrame

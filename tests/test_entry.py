@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 from collections import Counter
 
 import __spark_entry__ as entrymod
@@ -34,3 +37,18 @@ def test_registry_tags_are_read_somewhere():
 def test_headline_membership_fixed():
     # the headline total is the cross-round metric: 15 queries since r1
     assert len(entrymod.tagged("headline")) == 15
+
+
+def test_entry_imports_without_warnings():
+    # a UserWarning at import time (e.g. a UDF whose type hints PySpark
+    # cannot read) lands in the log of every process that imports the
+    # entry module
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-W", "error::UserWarning", "-c", "import __spark_entry__"],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

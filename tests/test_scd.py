@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Row
 
 from dataeng_azure_spotify_spark.operators.scd import (
@@ -163,3 +164,88 @@ def test_cdc_flow_track_history_except(spark, tmp_path):
     flow.merge_batch(spark, _rows(spark, [Row(k=1, v="b", noise="z", seq=_t(3))]))
     out = ParquetSnapshotTable(spark, str(tmp_path / "g")).read().orderBy("seq").collect()
     assert [r.v for r in out] == ["a", "b"]  # noise-only change suppressed
+
+
+# ---- SCD1 gold commits in O(changes) ------------------------------------
+
+_S1 = "k long, v string, seq timestamp, id long"
+
+
+def _full_merge_history(spark, batches):
+    """The full-merge reference: ``apply_scd1`` over the whole target per
+    batch, then ``_diff`` of consecutive snapshots."""
+    from dataeng_azure_spotify_spark.streaming.gold import ParquetSnapshotTable
+
+    snaps, target = [], None
+    for b in batches:
+        merged = apply_scd1(target, spark.createDataFrame(b, _S1), ["k"], "seq", ["id"])
+        target = spark.createDataFrame(
+            [tuple(r) for r in merged.select("k", "v", "seq", "id").collect()], _S1
+        )
+        snaps.append(target)
+    feed = [
+        ParquetSnapshotTable._diff(snaps[v - 1], snaps[v], ["k"], v)
+        for v in range(1, len(snaps))
+    ]
+    return snaps, feed
+
+
+def _bag(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_scd1_flow_commits_equal_full_merge(spark, tmp_path):
+    """CdcFlow's SCD1 parquet commit (merge and diff on the touched slice
+    only) yields the same snapshot and change-feed rows, version by
+    version, as merging and diffing the whole table."""
+    from dataeng_azure_spotify_spark.streaming.gold import CdcFlow
+
+    b1 = [(1, "a3", _t(3), 4), (1, "a2", _t(2), 5),  # out of order in batch
+          (2, "b0", _t(1), 1),                        # stale: loses to id 2
+          (3, "c2", _t(1), 6),                        # equal seq: update wins
+          (4, "d", _t(2), 7)]
+    batches = [
+        [(1, "a", _t(1), 1), (2, "b", _t(1), 2), (3, "c", _t(1), 3)],
+        b1,
+        b1,                                           # re-delivered batch
+        [(4, "d1", _t(5), 8), (4, "d2", _t(5), 9)],   # tie broken by id
+        [(None, "n1", _t(1), 10)],                    # NULL key, no expectations
+        [(5, "e", _t(1), 11)],                        # NULL-key row untouched
+        [(None, "n2", _t(2), 12), (2, "b", _t(1), 2)],
+    ]
+    flow = CdcFlow(name="f", gold_base=str(tmp_path / "g"), keys=["k"],
+                   sequence_by="seq", tiebreakers=["id"], backend="parquet")
+    snaps, feed = _full_merge_history(spark, batches)
+    table = flow.table(spark)
+    for v, b in enumerate(batches):
+        flow.merge_batch(spark, spark.createDataFrame(b, _S1))
+        assert _bag(table.read().select("k", "v", "seq", "id")) == _bag(snaps[v]), v
+        if v:
+            assert _bag(table.change_feed(["k"], v, v)) == _bag(feed[v - 1]), v
+    # NULL keys match NULL-safely: no change rows for the untouched NULL
+    # key, one update pair when it changes
+    assert all(r.k is not None for r in table.change_feed(["k"], 5, 5).collect())
+    assert {r._change_type for r in table.change_feed(["k"], 6, 6).collect()} == {
+        "update_preimage", "update_postimage"}
+    assert _bag(table.change_feed(["k"], 2, 2)) == {}  # re-delivery is a no-op
+
+
+def test_scd1_flow_refuses_legacy_duplicate_key(spark, tmp_path):
+    """An old version committed without change partials is key-validated
+    once, in full, before the first O(changes) commit over it: a
+    duplicate key raises before the repoint and the old version stays
+    live."""
+    from dataeng_azure_spotify_spark.streaming.gold import CdcFlow, ParquetSnapshotTable
+
+    base = str(tmp_path / "g")
+    v0 = [(1, "a", _t(1), 1), (1, "a-dup", _t(1), 2), (2, "b", _t(1), 3)]
+    ParquetSnapshotTable(spark, base).overwrite(spark.createDataFrame(v0, _S1))
+    flow = CdcFlow(name="f", gold_base=base, keys=["k"], sequence_by="seq",
+                   tiebreakers=["id"], backend="parquet")
+    with pytest.raises(ValueError, match="duplicate key"):
+        flow.merge_batch(spark, spark.createDataFrame([(2, "b2", _t(2), 4)], _S1))
+    table = flow.table(spark)
+    assert len(table.history()) == 1
+    assert _bag(table.read()) == _bag(spark.createDataFrame(v0, _S1))
