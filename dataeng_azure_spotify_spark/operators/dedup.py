@@ -23,8 +23,6 @@ normalize) so the DuckDB oracles mirror them symbol-for-symbol.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -86,19 +84,16 @@ def exact_dedup_groups(
     )
 
 
-#: Compressed input bytes one fan-out task should own (env-overridable:
-#: SPARK_GRAFT_SPREAD_TASK_BYTES). 64 KiB ≈ 150-250 ms of tokenize+md5
-#: work per task (measured r14: the featurization CPU density of the
-#: dedup/curation family is ~2-4 ms per compressed KB), comfortably
-#: above per-task scheduling latency; production clusters with larger
-#: parallelism keep the same density because the width derives from
-#: DATA, not cores.
-_SPREAD_TASK_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_TASK_BYTES", 64 * 1024)
-)
+#: Compressed input bytes one fan-out task should own. 64 KiB ≈ 150-250
+#: ms of tokenize+md5 work per task (measured r14: the featurization CPU
+#: density of the dedup/curation family is ~2-4 ms per compressed KB),
+#: comfortably above per-task scheduling latency; production clusters
+#: with larger parallelism keep the same density because the width
+#: derives from DATA, not cores.
+_SPREAD_TASK_BYTES = 64 * 1024
 
 
-def _spread(df: DataFrame, bytes_per_task: int = 0) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Fan a narrow input out before a CPU-heavy per-row pass, sized by
     DATA VOLUME (guide §2.2/§2.5 — the pagerank edge-count layout
     pattern), not core count. Small corpora arrive as one parquet split —
@@ -108,7 +103,7 @@ def _spread(df: DataFrame, bytes_per_task: int = 0) -> DataFrame:
     stage-latency-bound queries (the dsir_select 2.9 → 6.4 s driver
     regression).
 
-    Width = clamp(ceil(size_estimate / bytes_per_task), 1,
+    Width = clamp(ceil(size_estimate / _SPREAD_TASK_BYTES), 1,
     defaultParallelism), where the size estimate is the optimized plan's
     ``sizeInBytes`` (for parquet scans: the compressed file size — the
     same statistic AQE plans from). Probed via ``inputFiles()``
@@ -134,8 +129,7 @@ def _spread(df: DataFrame, bytes_per_task: int = 0) -> DataFrame:
         # unknown size: previous behavior (full fan-out) — better too
         # wide than a single-core CPU stage
         return df.repartition(par)
-    bpt = int(bytes_per_task) or _SPREAD_TASK_BYTES
-    target = max(1, min(par, -(-size // bpt)))
+    target = max(1, min(par, -(-size // _SPREAD_TASK_BYTES)))
     if target <= 1:
         return df
     return df.repartition(target)

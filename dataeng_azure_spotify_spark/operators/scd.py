@@ -18,17 +18,23 @@ over the key partitions), so Catalyst plans it as ONE shuffle on the
 business key followed by per-partition sorting — no driver-side loops.
 At scale:
 
-- SCD1 merge shuffles ``target ∪ updates`` on the key. The gold CDC
-  flow passes as ``target`` only the rows whose key the batch touches
-  (a broadcast semi join, ``ParquetSnapshotTable.merge_keys``), so a
-  micro-batch of K changed keys shuffles O(K) rows, not the table.
-- SCD2 incremental touches only *affected* keys (semi/anti join split),
-  so a micro-batch of K changed keys rewrites O(K·versions) rows, not the
-  whole dimension. On Delta-capable clusters the same logic drops into
-  ``MERGE INTO``; here the sink rewrites parquet snapshots atomically.
+- The gold CDC flow hands either merge only the touched slice of the
+  live snapshot: ``ParquetSnapshotTable.merge_keys`` splits it by the
+  batch's keys with a NULL-safe broadcast semi/anti join
+  (:func:`_match_keys`, no shuffle; a NULL key matches a NULL key, as
+  in the window's ``partitionBy`` and the Delta MERGE's ``<=>``). A
+  micro-batch of K changed keys costs O(K) rows (O(K·versions) for
+  SCD2), not the table; the untouched rest is still copied into the
+  new parquet snapshot.
+- SCD1 merge shuffles ``target ∪ updates`` on the key. SCD2 incremental
+  makes the same split itself, so over a whole target it still rebuilds
+  only the *affected* keys' histories.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,6 +42,28 @@ from pyspark.sql import functions as F
 START_COL = "__START_AT"
 END_COL = "__END_AT"
 CURRENT_COL = "__IS_CURRENT"
+
+
+def _null_safe_eq(left: "list[str]", right: "list[str]"):
+    """``left[i] <=> right[i]`` for every i, ANDed: the join condition
+    under which a NULL key matches a NULL key."""
+    return reduce(
+        operator.and_,
+        [F.col(a).eqNullSafe(F.col(b)) for a, b in zip(left, right)],
+    )
+
+
+def _match_keys(df: DataFrame, touched: DataFrame, keys: "list[str]", how: str) -> DataFrame:
+    """``df``'s rows whose ``keys`` do (``left_semi``) or do not
+    (``left_anti``) occur in ``touched``, matched NULL-safely through a
+    broadcast of ``touched``'s keys (duplicates there are harmless to a
+    semi/anti join)."""
+    probe = touched.select(*[F.col(k).alias(f"__t_{k}") for k in keys])
+    return df.join(
+        F.broadcast(probe),
+        _null_safe_eq(keys, [f"__t_{k}" for k in keys]),
+        how,
+    )
 
 
 def _order_cols(sequence_by: str, tiebreakers: list[str] | None, desc: bool):
@@ -135,11 +163,12 @@ def apply_scd2(
     SCD2 target (the ``foreachBatch`` body of the gold CDC flow).
 
     Only the keys present in ``updates`` are touched: the target splits
-    into affected (left-semi) and untouched (left-anti) halves, the
-    affected histories are rebuilt from their underlying change rows plus
-    the new updates (correct under out-of-order ``sequence_by`` and
-    multi-change batches — SURVEY.md §7 M4 hard cases), and the untouched
-    half passes through unchanged. A micro-batch touching K keys costs
+    NULL-safely into affected (left-semi) and untouched (left-anti)
+    halves (:func:`_match_keys`), the affected histories are rebuilt
+    from their underlying change rows plus the new updates (correct
+    under out-of-order ``sequence_by`` and multi-change batches —
+    SURVEY.md §7 M4 hard cases), and the untouched half passes through
+    unchanged. A micro-batch touching K keys costs
     O(K · versions-per-key), independent of dimension size.
     """
     if target is None:
@@ -147,9 +176,8 @@ def apply_scd2(
             updates, keys, sequence_by, tiebreakers, drop_unchanged, tracked_cols
         )
 
-    affected_keys = updates.select(*keys).distinct()
-    target_affected = target.join(F.broadcast(affected_keys), on=keys, how="left_semi")
-    target_rest = target.join(F.broadcast(affected_keys), on=keys, how="left_anti")
+    target_affected = _match_keys(target, updates, keys, "left_semi")
+    target_rest = _match_keys(target, updates, keys, "left_anti")
 
     # Each existing SCD2 row *is* the change row that opened it.
     change_cols = [c for c in target.columns if c not in (START_COL, END_COL, CURRENT_COL)]

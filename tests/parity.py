@@ -24,6 +24,8 @@ TABLES = (
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per corpus table. The caller
+    owns it: reuse it across queries and close it (``with`` closes)."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -54,8 +56,11 @@ def canonicalize(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def compare_query(spark, name: str, fn, sql: str, sf_dir: str) -> list[str]:
-    """Return a list of mismatch descriptions (empty = pass)."""
+def compare_query(
+    spark, name: str, fn, sql: str, sf_dir: str, con: duckdb.DuckDBPyConnection
+) -> list[str]:
+    """Return a list of mismatch descriptions (empty = pass). ``con`` is
+    a :func:`duckdb_conn` over the same ``sf_dir``."""
     problems: list[str] = []
     sdf = fn(spark, sf_dir)
     # The driver's canonicalizer (pandas sort_values over raw cells)
@@ -76,7 +81,6 @@ def compare_query(spark, name: str, fn, sql: str, sf_dir: str) -> list[str]:
         )
         return problems
     spark_pd = sdf.toPandas()
-    con = duckdb_conn(sf_dir)
     duck_pd = con.execute(sql).df()
     if sorted(spark_pd.columns) != sorted(duck_pd.columns):
         problems.append(
@@ -107,13 +111,16 @@ def run_all(spark, sf_dir: str, only: list[str] | None = None) -> dict[str, list
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     results: dict[str, list[str]] = {}
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        try:
-            results[name] = compare_query(spark, name, fn, oracles[name], sf_dir)
-        except Exception as e:  # noqa: BLE001
-            results[name] = [f"{name}: EXCEPTION {type(e).__name__}: {e}"]
+    with duckdb_conn(sf_dir) as con:
+        for name, fn in qs.items():
+            if only and name not in only:
+                continue
+            try:
+                results[name] = compare_query(
+                    spark, name, fn, oracles[name], sf_dir, con
+                )
+            except Exception as e:  # noqa: BLE001
+                results[name] = [f"{name}: EXCEPTION {type(e).__name__}: {e}"]
     return results
 
 

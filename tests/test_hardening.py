@@ -130,6 +130,7 @@ def test_snapshot_history_is_version_ordered_and_orphan_safe(spark, tmp_path):
     hist = t.history()
     assert len(hist) == 3 and hist[-1] == t._live()
     assert [t._snap_n(h) for h in hist] == [0, 1, 2]
+    assert t._snap_n("snap-123456789012") is None  # not version 123456789012
     assert t.read_version(-1).collect()[0]["v"] == 2
     assert t.read_version(0).collect()[0]["v"] == 0
 
@@ -143,35 +144,25 @@ def test_snapshot_history_is_version_ordered_and_orphan_safe(spark, tmp_path):
     assert t.read().collect()[0]["v"] == 2
 
 
-def test_snapshot_legacy_unversioned_names_are_backcompat(spark, tmp_path):
-    """A base dir holding pre-versioned ``snap-<12hex>`` snapshots (the
-    old naming) must neither crash history()/vacuum()/overwrite() nor
-    misparse an all-digit hex suffix as a huge version number."""
+def test_snapshot_crashed_first_commit_is_not_history(spark, tmp_path):
+    """A writer that crashed before the FIRST commit of a table leaves
+    an orphan ``snap-00000000-*``; the first real commit is version 0
+    and removes it, so it never becomes history, read_version(0) or a
+    change-feed preimage."""
     from dataeng_azure_spotify_spark.streaming.gold import ParquetSnapshotTable
 
+    S = "id long, v string"
     base = str(tmp_path / "tbl")
-    t = ParquetSnapshotTable(spark, base)
-    # legacy layout: unversioned live snapshot + an all-digit hex orphan
-    legacy = "snap-0a1b2c3d4e5f"
-    spark.createDataFrame([Row(v=41)]).write.parquet(os.path.join(base, legacy))
-    os.makedirs(os.path.join(base, "snap-123456789012"))
-    with open(os.path.join(base, "_current"), "w") as f:
-        f.write(legacy)
-
-    assert t._snap_n(legacy) is None
-    assert t._snap_n("snap-123456789012") is None  # not version 123456789012
-    assert t.read().collect()[0]["v"] == 41  # pointer read still works
-    assert t.history() == []  # legacy snapshots carry no history position
-    t.vacuum(keep_last=1)  # no-op, never deletes the legacy live snapshot
-    assert t.read().collect()[0]["v"] == 41
-
-    # a new write starts versioned numbering from 0 and repoints
-    t.overwrite(spark.createDataFrame([Row(v=42)]))
-    assert t.read().collect()[0]["v"] == 42
-    assert [t._snap_n(h) for h in t.history()] == [0]
-    t.overwrite(spark.createDataFrame([Row(v=43)]))
-    assert [t._snap_n(h) for h in t.history()] == [0, 1]
-    assert t.read_version(-1).collect()[0]["v"] == 43
+    spark.createDataFrame([(1, "crashed")], S).write.parquet(
+        os.path.join(base, "snap-00000000-deadbeef0000")
+    )
+    t = ParquetSnapshotTable(spark, base, cdf_keys=["id"])
+    t.overwrite(spark.createDataFrame([(1, "a")], S))
+    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], S))
+    assert len(t.history()) == 2
+    assert [tuple(r) for r in t.read_version(0).collect()] == [(1, "a")]
+    feed = [tuple(r) for r in t.change_feed(["id"], 1).collect()]
+    assert feed == [(2, "b", "insert", 1)]
 
 
 def test_session_fold_late_event_cannot_reverse_time():

@@ -249,3 +249,66 @@ def test_scd1_flow_refuses_legacy_duplicate_key(spark, tmp_path):
     table = flow.table(spark)
     assert len(table.history()) == 1
     assert _bag(table.read()) == _bag(spark.createDataFrame(v0, _S1))
+
+
+# ---- SCD2: NULL keys, and the gold flow's keyed commit -------------------
+
+_SCD2_COLS = ["k", "v", "seq", "id", START_COL, END_COL, CURRENT_COL]
+
+
+def _current_per_key(df):
+    from collections import Counter
+
+    return Counter(r.k for r in df.collect() if r[CURRENT_COL])
+
+
+def test_scd2_null_key_update_keeps_one_current_row(spark):
+    """A NULL key matches a NULL key in the affected/untouched split, as
+    it does in the rebuild's window: an update closes the old version
+    instead of opening a second current row."""
+    target = scd2_from_history(
+        spark.createDataFrame([(None, "a", _t(1), 1), (1, "x", _t(1), 2)], _S1),
+        ["k"], "seq", ["id"],
+    )
+    upd = spark.createDataFrame([(None, "b", _t(2), 3)], _S1)
+    out = apply_scd2(target, upd, ["k"], "seq", ["id"])
+    assert _current_per_key(out) == {None: 1, 1: 1}
+    null_rows = {r.v: r for r in out.collect() if r.k is None}
+    assert null_rows["a"][END_COL] == _t(2) and not null_rows["a"][CURRENT_COL]
+    assert null_rows["b"][CURRENT_COL]
+
+
+def test_scd2_flow_commits_equal_full_history(spark, tmp_path):
+    """CdcFlow's SCD2 parquet commit (rebuild on the touched slice only)
+    yields, after every batch, the table ``scd2_from_history`` builds
+    from every change so far — including a NULL key without
+    expectations, out-of-order and late rows, and a re-delivered batch
+    (re-delivery is idempotent, so the reference takes distinct
+    changes)."""
+    from dataeng_azure_spotify_spark.streaming.gold import CdcFlow
+
+    b2 = [(1, "a3", _t(3), 4), (None, "n4", _t(4), 5),
+          (1, "a2", _t(2), 6)]                        # out of order in batch
+    batches = [
+        [(1, "a", _t(1), 1), (2, "b", _t(1), 2), (None, "n1", _t(1), 3)],
+        b2,
+        b2,                                           # re-delivered batch
+        [(None, "n3", _t(3), 7), (3, "c", _t(1), 8)],  # late NULL-key version
+        [(2, "b5", _t(5), 9)],                        # NULL key untouched
+    ]
+    flow = CdcFlow(name="d", gold_base=str(tmp_path / "g"), keys=["k"],
+                   sequence_by="seq", scd_type=2, tiebreakers=["id"],
+                   backend="parquet")
+    table = flow.table(spark)
+    seen: list = []
+    for v, b in enumerate(batches):
+        flow.merge_batch(spark, spark.createDataFrame(b, _S1))
+        seen += b
+        want = scd2_from_history(
+            spark.createDataFrame(list(set(seen)), _S1),
+            ["k"], "seq", ["id"],
+        )
+        got = table.read()
+        assert _bag(got.select(*_SCD2_COLS)) == _bag(want.select(*_SCD2_COLS)), v
+        assert set(_current_per_key(got).values()) == {1}, v
+    assert len(table.history()) == len(batches)

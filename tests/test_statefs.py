@@ -189,12 +189,12 @@ def test_create_exclusive_contract(spark, tmp_path, scheme):
 
 
 def test_versioned_pointer_commit_has_no_missing_window(spark, tmp_path):
-    """The r11 verdict's Missing #5: the legacy pointer protocol had a
-    delete+rename window on flat-namespace stores where readers saw NO
-    pointer. With versioned pointer files the commit point is a single
-    conditional put — inject a crash at EVERY step of _write_pointer
-    and show a concurrent reader always resolves a complete committed
-    pointer (old table before the put, new table after)."""
+    """A single pointer file rewritten via delete+rename has a window on
+    flat-namespace stores where readers see NO pointer. With versioned
+    pointer files the commit point is a single conditional put — inject
+    a crash at EVERY step of _write_pointer and show a concurrent reader
+    always resolves a complete committed pointer (old table before the
+    put, new table after)."""
     from dataeng_azure_spotify_spark.streaming.gold import (
         ParquetSnapshotTable,
     )
@@ -202,6 +202,7 @@ def test_versioned_pointer_commit_has_no_missing_window(spark, tmp_path):
     S = "id long, v string"
     base = str(tmp_path / "t")
     t = ParquetSnapshotTable(spark, base)
+    t.overwrite(spark.createDataFrame([(0, "z")], S))
     t.overwrite(spark.createDataFrame([(1, "a")], S))
     assert t.read().count() == 1
 
@@ -217,15 +218,22 @@ def test_versioned_pointer_commit_has_no_missing_window(spark, tmp_path):
     reader = ParquetSnapshotTable(spark, base)
     assert reader.read().count() == 1  # old version still live
 
-    # crash AFTER the put, before legacy refresh + cleanup:
-    orig_wa = t.fs.write_atomic
-    t.fs.write_atomic = lambda *a, **k: (_ for _ in ()).throw(Boom())
+    # crash AFTER the put, at the retirement of the oldest pointer (two
+    # pointers exist, so this commit's put makes a third to retire):
+    orig_rm = t.fs.rmtree
+
+    def rmtree(path):
+        if os.path.basename(path).startswith("_current.v"):
+            raise Boom()
+        orig_rm(path)
+
+    t.fs.rmtree = rmtree
     with pytest.raises(Boom):
         t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], S))
-    t.fs.write_atomic = orig_wa
+    t.fs.rmtree = orig_rm
     reader = ParquetSnapshotTable(spark, base)
     assert reader.read().count() == 2  # commit point passed -> new live
-    assert len(reader.history()) == 2
+    assert len(reader.history()) == 3
 
     # the retry after the second crash re-commits cleanly on top
     t.overwrite(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], S))
@@ -233,7 +241,3 @@ def test_versioned_pointer_commit_has_no_missing_window(spark, tmp_path):
     # housekeeping bounded: at most two pointer files survive
     ptrs = [d for d in os.listdir(base) if d.startswith("_current.v")]
     assert 1 <= len(ptrs) <= 2
-    # legacy _current refreshed for pre-r12 readers
-    with open(os.path.join(base, "_current")) as f:
-        legacy = f.read().strip()
-    assert legacy == reader._live() or legacy in os.listdir(base)
