@@ -82,6 +82,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .compaction import (
+    CompactionLog,
+    PartitionedTable,
+    check_format_version,
+    fold_runs,
+    id_set,
+    live_run_count,
+    reject_compact_namespace,
+    retract_ids,
+    validate_compact_tag,
+)
 from .dedup import _doc_shingle_hashes, _prefix_len, _verify_jaccard
 from .graph import connected_components
 
@@ -157,10 +168,6 @@ class NearDupLabels:
     META = "meta"
 
     def __init__(self, spark: SparkSession, path: str) -> None:
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            CompactionLog,
-        )
-
         self.spark = spark
         self.path = path
         self._shingles_path = os.path.join(path, self.SHINGLES)
@@ -171,6 +178,16 @@ class NearDupLabels:
         self._clog = CompactionLog(spark, path)
         self.fs = self._clog.fs  # StateFS (r11): shared per-path dispatch
         self._meta: dict | None = None
+        #: the run-partitioned shingle and prefix tables (live reads)
+        self._run_tables = [
+            PartitionedTable(
+                p, lambda p=p, s=schema: self._read_or_empty(p, s), ("run",)
+            )
+            for p, schema in (
+                (self._shingles_path, SHINGLES_SCHEMA),
+                (self._prefix_path, PREFIX_SCHEMA),
+            )
+        ]
 
     # -- construction ---------------------------------------------------
     @classmethod
@@ -328,20 +345,12 @@ class NearDupLabels:
         layout could silently misread changed columns — upgrade the
         engine instead (do NOT rebuild, that would destroy the newer
         index)."""
-        if not self.exists():
-            return  # empty/absent index: nothing on disk to misread
-        ver = int(self.meta.get("format_version") or 1)
-        if ver == FORMAT_VERSION:
-            return
-        direction = (
-            "rebuild the index with build() to upgrade it"
-            if ver < FORMAT_VERSION
-            else "upgrade this engine; rebuilding would destroy the newer index"
-        )
-        raise ValueError(
-            f"NearDupLabels at {self.path!r} has artifact format v{ver}; "
-            f"this code speaks v{FORMAT_VERSION} — {direction}"
-        )
+        if self.exists():  # empty/absent index: nothing on disk to misread
+            check_format_version(
+                int(self.meta.get("format_version") or 1),
+                FORMAT_VERSION,
+                f"NearDupLabels at {self.path!r}",
+            )
 
     # -- read surface ---------------------------------------------------
     def _read_or_empty(self, path: str, schema: str) -> DataFrame:
@@ -411,10 +420,6 @@ class NearDupLabels:
         """
         if run_id == BUILD_RUN:
             raise ValueError(f"run_id {BUILD_RUN!r} is reserved for build()")
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            reject_compact_namespace,
-        )
-
         reject_compact_namespace(run_id, "NearDupLabels.append")
         self._check_version()
         meta = self.meta
@@ -611,10 +616,11 @@ class NearDupLabels:
         path): their label rows disappear, their clusters re-converge
         WITHOUT them (removing the witness doc that bridged a component
         splits the cluster — the structurally hard case), and their
-        shingle/prefix rows are purged so no future append can link a
-        new document to a deleted one. ``ids``'s first column is the
-        doc id. Returns a summary dict; after commit,
-        ``labels()`` ≡ a from-scratch ``build`` on the remaining corpus.
+        shingle/prefix rows are purged (:func:`..compaction.retract_ids`)
+        so no future append can link a new document to a deleted one.
+        ``ids``'s first column is the doc id. Returns a summary dict;
+        after commit, ``labels()`` ≡ a from-scratch ``build`` on the
+        remaining corpus.
 
         Cost: O(touched components) for the re-converge — survivors'
         candidate edges are regenerated from the STORED prefix index
@@ -638,20 +644,12 @@ class NearDupLabels:
         """
         if run_id == BUILD_RUN:
             raise ValueError(f"run_id {BUILD_RUN!r} is reserved for build()")
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            reject_compact_namespace,
-        )
-
         reject_compact_namespace(run_id, "NearDupLabels.remove")
         self._check_version()
         meta = self.meta
         threshold = float(meta["threshold"])
         nb = int(meta["num_buckets"])
-        rm = (
-            ids.select(F.col(ids.columns[0]).cast("long").alias("doc_id"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        rm = id_set(ids, "doc_id")
         if run_id in self.runs():  # committed replay → no-op
             return {"removed_labels": 0, "affected_clusters": 0,
                     "touched_buckets": [], "replay": True}
@@ -762,39 +760,10 @@ class NearDupLabels:
             self._clean_emptied(all_affected - kept)
             touched_buckets = sorted(all_affected)
 
-        # -- phase 2: purge the docs' shingle/prefix rows (their run
-        # partitions rewrite in place; fully-emptied partitions removed)
-        rm_doc = rm.select(F.col("doc_id").alias("doc"))
-        for path, schema in (
-            (self._shingles_path, SHINGLES_SCHEMA),
-            (self._prefix_path, PREFIX_SCHEMA),
-        ):
-            tbl = self._read_or_empty(path, schema)
-            truns = [
-                r["run"]
-                for r in tbl.join(F.broadcast(rm_doc), "doc")
-                .select("run")
-                .distinct()
-                .collect()  # O(touched runs)
-            ]
-            if not truns:
-                continue
-            remaining = (
-                tbl.filter(F.col("run").isin(truns))
-                .join(F.broadcast(rm_doc), "doc", "left_anti")
-                .localCheckpoint(eager=True)  # reads the files it replaces
-            )
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run")
-                .parquet(path)
-            )
-            kept_runs = {
-                r["run"] for r in remaining.select("run").distinct().collect()
-            }
-            for r in set(truns) - kept_runs:
-                self.fs.rmtree(os.path.join(path, f"run={r}"))
+        # -- phase 2: purge the docs' shingle/prefix rows (the run
+        # partitions they empty are deleted, the rest rewrite in place)
+        for table in self._run_tables:
+            retract_ids(table, rm, "doc", "NearDupLabels.remove")
 
         self._mark_run(run_id)
         return {
@@ -804,7 +773,6 @@ class NearDupLabels:
             "replay": False,
         }
 
-    # -- internals ------------------------------------------------------
     # -- maintenance ------------------------------------------------------
     def live_run_count(self) -> int:
         """Number of LIVE ``run=`` partition names on disk across the
@@ -812,14 +780,9 @@ class NearDupLabels:
         — the quantity the :func:`...operators.compaction.
         maybe_autocompact` policy thresholds. StateFS listings only, no
         Spark job."""
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            distinct_run_names,
+        return live_run_count(
+            self._clog, [self._shingles_path, self._prefix_path], nested=False
         )
-
-        names = distinct_run_names(
-            self._shingles_path, nested=False
-        ) | distinct_run_names(self._prefix_path, nested=False)
-        return len(names - self._clog.folded())
 
     def compact(self, tag: str) -> dict:
         """Fold every COMMITTED run's shingle/prefix partitions into ONE
@@ -839,93 +802,14 @@ class NearDupLabels:
         therefore safe to run even with one crashed epoch pending.
         Protocol and crash windows: :mod:`..operators.compaction`.
         Single-writer, like every other maintenance method."""
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            count_run_partitions,
-            delete_folded_partitions,
-            is_compact_tag,
-            validate_compact_tag,
-        )
-
         validate_compact_tag(tag, "NearDupLabels.compact")
         self._check_version()
-        tables = (
-            (self._shingles_path, SHINGLES_SCHEMA),
-            (self._prefix_path, PREFIX_SCHEMA),
+        return fold_runs(
+            self._clog, tag, self._run_tables,
+            may_fold=set(self.runs()).__contains__,
         )
-        dirs_before = sum(
-            count_run_partitions(p, nested=False) for p, _ in tables
-        )
-        committed_c = self._clog.committed()
-        swept = sum(
-            delete_folded_partitions(
-                p, {r for fl in committed_c.values() for r in fl}, nested=False
-            )
-            for p, _ in tables
-        )
-        committed_runs = set(self.runs())
-        folded_any: set[str] = set()
-        in_flight: set[str] = set()
-        for path, schema in tables:
-            live = self._read_or_empty(path, schema).localCheckpoint(
-                eager=True
-            )
-            runs_now = {
-                str(r["run"])
-                for r in live.select("run").distinct().collect()  # O(runs)
-            }
-            # fold committed runs and previous compact tags; leave a
-            # crashed in-flight run (dir without a registry entry) alone
-            fold = {
-                r
-                for r in runs_now
-                if r != tag and (r in committed_runs or is_compact_tag(r))
-            }
-            in_flight |= runs_now - fold - {tag}
-            if fold:
-                (
-                    live.filter(F.col("run").isin(sorted(fold)))
-                    .drop("run")
-                    .withColumn("run", F.lit(tag))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("run")
-                    .parquet(path)
-                )
-            live.unpersist()
-            folded_any |= fold
-        if not folded_any:
-            return {
-                "tag": tag,
-                "folded_runs": [],
-                "skipped_in_flight": sorted(in_flight),
-                "swept_dirs": swept,
-                "partition_dirs_before": dirs_before,
-                "partition_dirs_after": sum(
-                    count_run_partitions(p, nested=False) for p, _ in tables
-                ),
-                "replay": tag in committed_c,
-            }
-        folded_all = set(folded_any)  # COMMIT (+ superseded tags' sets)
-        for t in folded_any:
-            folded_all |= set(committed_c.get(t, []))
-        self._clog.commit(tag, sorted(folded_all))
-        for p, _ in tables:
-            delete_folded_partitions(p, folded_all, nested=False)
-        for t in folded_any:
-            if t in committed_c:
-                self._clog.drop_marker(t)
-        return {
-            "tag": tag,
-            "folded_runs": sorted(folded_any),
-            "skipped_in_flight": sorted(in_flight),
-            "swept_dirs": swept,
-            "partition_dirs_before": dirs_before,
-            "partition_dirs_after": sum(
-                count_run_partitions(p, nested=False) for p, _ in tables
-            ),
-            "replay": False,
-        }
 
+    # -- internals ------------------------------------------------------
     def _old_side(self, path: str, run_id: str) -> DataFrame:
         """Stored run partitions EXCLUDING ``run_id`` — a crashed
         attempt's own partial partitions must not contaminate the

@@ -10,23 +10,34 @@ committed run partitions into ONE consolidated ``run=<tag>`` partition
 per bucket while preserving the artifacts' exactly-once replay and
 retraction semantics.
 
-Commit protocol (shared by the three run-partitioned artifacts; each
-step idempotent, so a crashed ``compact`` retried with the SAME tag
+Commit protocol — :func:`fold_runs` is its one implementation, which
+every run-partitioned artifact's ``compact`` calls (each step
+idempotent, so a crashed ``compact`` retried with the SAME tag
 converges from any intermediate state):
 
-1. (artifact-specific) write the per-run admitted-id REGISTRY for the
-   folded runs — the information replay needs once the row-level run
-   attribution is gone. Idempotent dynamic overwrite keyed by run.
+0. sweep the folded ``run=`` directories a crash between steps 3 and
+   4 left behind, then materialize each table's live rows.
+1. (artifacts with a registry) write the per-run admitted-id REGISTRY
+   for the folded runs — the information replay needs once the
+   row-level run attribution is gone. Idempotent dynamic overwrite
+   keyed by run.
 2. write the consolidated rows under ``run=<tag>`` (dynamic overwrite
    of exactly the tag's partitions). Readers IGNORE rows under an
    uncommitted compact tag, so a crash here leaves every read exact.
 3. write the marker ``compactions/<tag>/`` (parquet rows naming the
-   folded runs; the ``_SUCCESS`` footer Spark commits last is the
-   atomic commit point). From this instant readers use the tag rows
-   and EXCLUDE the folded runs' rows.
+   folded runs, plus the folded sets of the tags it supersedes; the
+   ``_SUCCESS`` footer Spark commits last is the atomic commit point).
+   From this instant readers use the tag rows and EXCLUDE the folded
+   runs' rows.
 4. delete the folded ``run=`` directories (idempotent rmtree) and any
    superseded markers. Readers never needed this step for correctness
    — it is what reclaims the file listings.
+
+Retraction — :func:`retract_ids` is the one implementation of the
+partition-level delete behind every artifact's ``remove`` (and the
+registry purge that goes with it): count the removed ids per
+partition, delete the partitions they empty FIRST, then
+dynamic-overwrite the partly hit ones from one materialized anti-join.
 
 Reader contract: every artifact read of a run-partitioned table goes
 through :meth:`CompactionLog.live_run_filter`, which keeps a row iff
@@ -54,8 +65,9 @@ from __future__ import annotations
 
 import os
 import re
+from typing import Callable, NamedTuple, Sequence
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataeng_azure_spotify_spark.statefs import statefs_for
@@ -193,17 +205,14 @@ class CompactionLog:
         self.fs.rmtree(os.path.join(self.path, tag))
 
 
-def delete_folded_partitions(
-    table_path: str, folded: set[str], nested: bool
-) -> int:
-    """Step 4: remove the folded ``run=`` directories. ``nested`` means
-    the run level sits under a first-level partition
+def _run_dirs(table_path: str, nested: bool) -> "list[tuple[str, str]]":
+    """(directory, run name) of every ``run=`` directory on disk.
+    ``nested`` means the run level sits under a first-level partition
     (``bucket=*/run=*`` / ``cid=*/run=*``); otherwise ``run=*`` is
-    top-level. Idempotent; returns directories removed."""
+    top-level."""
     fs = statefs_for(table_path)
-    if not fs.isdir(table_path) or not folded:
-        return 0
-    removed = 0
+    if not fs.isdir(table_path):
+        return []
     parents = (
         [
             os.path.join(table_path, d)
@@ -213,59 +222,263 @@ def delete_folded_partitions(
         if nested
         else [table_path]
     )
-    for parent in parents:
-        for r in folded:
-            d = os.path.join(parent, f"run={r}")
-            if fs.isdir(d):
-                fs.rmtree(d)
-                removed += 1
-    return removed
+    return [
+        (os.path.join(parent, d), d[len("run="):])
+        for parent in parents
+        for d in fs.listdir(parent)
+        if d.startswith("run=") and fs.isdir(os.path.join(parent, d))
+    ]
+
+
+def delete_folded_partitions(
+    table_path: str, folded: set[str], nested: bool
+) -> int:
+    """Step 4: remove the folded ``run=`` directories (see
+    :func:`_run_dirs` for ``nested``). Idempotent; returns directories
+    removed."""
+    if not folded:
+        return 0
+    fs = statefs_for(table_path)
+    doomed = [d for d, run in _run_dirs(table_path, nested) if run in folded]
+    for d in doomed:
+        fs.rmtree(d)
+    return len(doomed)
 
 
 def count_run_partitions(table_path: str, nested: bool) -> int:
     """Observability for the before/after table: number of ``run=``
     directories currently on disk."""
-    fs = statefs_for(table_path)
-    if not fs.isdir(table_path):
-        return 0
-    parents = (
-        [
-            os.path.join(table_path, d)
-            for d in fs.listdir(table_path)
-            if "=" in d and fs.isdir(os.path.join(table_path, d))
-        ]
-        if nested
-        else [table_path]
-    )
-    return sum(
-        1
-        for parent in parents
-        for d in fs.listdir(parent)
-        if d.startswith("run=") and fs.isdir(os.path.join(parent, d))
-    )
+    return len(_run_dirs(table_path, nested))
 
 
 def distinct_run_names(table_path: str, nested: bool) -> set[str]:
     """Distinct ``run=<name>`` partition names currently on disk (one
     listing pass; names, not per-bucket dir counts)."""
-    fs = statefs_for(table_path)
-    if not fs.isdir(table_path):
-        return set()
-    parents = (
-        [
-            os.path.join(table_path, d)
-            for d in fs.listdir(table_path)
-            if "=" in d and fs.isdir(os.path.join(table_path, d))
-        ]
-        if nested
-        else [table_path]
+    return {run for _, run in _run_dirs(table_path, nested)}
+
+
+def live_run_count(
+    clog: CompactionLog, paths: "Sequence[str]", nested: bool
+) -> int:
+    """Number of LIVE ``run=`` partition names on disk across ``paths``
+    (distinct names minus committed-folded ones) — the quantity the
+    :func:`maybe_autocompact` policy thresholds. StateFS listings only,
+    no Spark job."""
+    names = set().union(*(distinct_run_names(p, nested) for p in paths))
+    return len(names - clog.folded())
+
+
+def read_registry(spark: SparkSession, path: str, id_col: str) -> DataFrame:
+    """(run, ``id_col``) — the admitted ids of every COMPACTED run
+    (written by :func:`fold_runs` step 1; what a folded run's replay
+    returns once row-level run attribution is gone)."""
+    schema = f"run string, {id_col} long"
+    if not statefs_for(path, spark).exists(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def check_format_version(found: int, expected: int, what: str) -> None:
+    """Refuse an artifact whose on-disk layout version this code does
+    not speak, in EITHER direction: an older one is upgraded by a
+    rebuild, a newer one by upgrading the engine (rebuilding would
+    destroy it). ``what`` names the artifact in the message."""
+    if found == expected:
+        return
+    direction = (
+        "rebuild the index with build() to upgrade it"
+        if found < expected
+        else "upgrade this engine; rebuilding would destroy the newer index"
     )
-    return {
-        d[len("run="):]
-        for parent in parents
-        for d in fs.listdir(parent)
-        if d.startswith("run=") and fs.isdir(os.path.join(parent, d))
+    raise ValueError(
+        f"{what} has artifact format v{found}; this code speaks "
+        f"v{expected} — {direction}"
+    )
+
+
+class PartitionedTable(NamedTuple):
+    """One partitioned parquet table of an artifact: its directory, a
+    reader of its LIVE rows, and its partition columns (``run`` last
+    for a run-partitioned table)."""
+
+    path: str
+    read: Callable[[], DataFrame]
+    partition_cols: "tuple[str, ...]"
+
+    @property
+    def nested(self) -> bool:
+        return len(self.partition_cols) > 1
+
+
+def _overwrite_partitions(
+    df: DataFrame, path: str, partition_cols: "Sequence[str]"
+) -> None:
+    """Dynamic overwrite: replace exactly the partitions ``df`` holds."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
+def fold_runs(
+    clog: CompactionLog,
+    tag: str,
+    tables: "Sequence[PartitionedTable]",
+    may_fold: "Callable[[str], bool]" = lambda run: True,
+    registry: "tuple[str, str] | None" = None,
+) -> dict:
+    """THE compaction fold (steps 0-4 of the module docstring) of one
+    artifact's run-partitioned ``tables``: every live run other than
+    ``tag`` is rewritten under ``run=<tag>`` if it is an earlier
+    compact tag or ``may_fold(run)`` holds; the others are reported as
+    ``skipped_in_flight``. ``registry=(path, id_col)`` freezes the ids
+    of each folded ORIGINAL run of the first table (step 1). Returns
+    the summary dict the artifacts' ``compact`` methods report.
+
+    Steps 0 and 4 call :func:`delete_folded_partitions` and step 3
+    :meth:`CompactionLog.commit`, both looked up when they run."""
+
+    def dirs() -> int:
+        return sum(count_run_partitions(t.path, t.nested) for t in tables)
+
+    dirs_before = dirs()
+    committed = clog.committed()
+    # step 0 — sweep: folded dirs a prior crash (between marker commit
+    # and deletion) left behind are invisible to readers but still
+    # cost listings; clean them first so a retry converges
+    lingering = {r for fl in committed.values() for r in fl}
+    swept = sum(
+        delete_folded_partitions(t.path, lingering, nested=t.nested)
+        for t in tables
+    )
+    folded: set[str] = set()
+    in_flight: set[str] = set()
+    for i, t in enumerate(tables):
+        live = t.read().localCheckpoint(eager=True)  # replaces what it read
+        runs = {
+            str(r["run"])
+            for r in live.select("run").distinct().collect()  # O(runs)
+        } - {tag}
+        fold = {r for r in runs if is_compact_tag(r) or may_fold(r)}
+        in_flight |= runs - fold
+        folded |= fold
+        # step 1 — registry: compact tags being re-folded had theirs
+        # frozen already, keyed by the ORIGINAL runs
+        originals = sorted(r for r in fold if not is_compact_tag(r))
+        if registry is not None and i == 0 and originals:
+            reg_path, id_col = registry
+            _overwrite_partitions(
+                live.filter(F.col("run").isin(originals))
+                .select("run", id_col)
+                .distinct(),
+                reg_path,
+                ["run"],
+            )
+        if fold:  # step 2 — the rows under the (uncommitted) tag
+            _overwrite_partitions(
+                live.filter(F.col("run").isin(sorted(fold | {tag})))
+                .withColumn("run", F.lit(tag)),
+                t.path,
+                t.partition_cols,
+            )
+        live.unpersist()
+    summary = {
+        "tag": tag,
+        "folded_runs": sorted(folded),
+        "skipped_in_flight": sorted(in_flight),
+        "swept_dirs": swept,
+        "partition_dirs_before": dirs_before,
     }
+    if not folded:
+        return {**summary, "partition_dirs_after": dirs(),
+                "replay": tag in committed}
+    # step 3 — COMMIT: the marker carries the folded runs PLUS the
+    # folded sets of the superseded tags and of ``tag`` itself (so
+    # markers can be dropped without resurrecting rows a lingering dir
+    # still holds, and a re-fold keeps the tag's earlier replays)
+    marker = set(folded)
+    for r in folded | {tag}:
+        marker |= set(committed.get(r, []))
+    clog.commit(tag, sorted(marker))
+    # step 4 — reclaim listings: folded dirs + superseded markers
+    for t in tables:
+        delete_folded_partitions(t.path, marker, nested=t.nested)
+    for r in folded & set(committed):
+        clog.drop_marker(r)
+    return {**summary, "partition_dirs_after": dirs(), "replay": False}
+
+
+def id_set(ids: DataFrame, name: str, cast: "str | None" = "long") -> DataFrame:
+    """``ids``'s first column as the distinct one-column frame ``name``
+    that :func:`retract_ids` takes — materialized, because a retraction
+    reads it once per rewritten table and may replace files the
+    lineage of ``ids`` reads."""
+    c = F.col(ids.columns[0])
+    return (
+        ids.select((c if cast is None else c.cast(cast)).alias(name))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def retract_ids(
+    table: PartitionedTable, rm: DataFrame, id_col: str, where: str
+) -> "list[tuple]":
+    """THE retraction of one partitioned parquet table: remove the rows
+    whose ``id_col`` is in ``rm`` (one column, see :func:`id_set`),
+    rewriting only the partitions that hold one. Partitions that lose
+    every row are deleted FIRST — a dynamic overwrite never touches a
+    partition absent from the written data — then the partly hit ones
+    dynamic-overwrite from one materialized anti-join (the rewrite
+    reads the files it replaces). Idempotent from every intermediate
+    crash state: a retry sees only the ids still present. Raises if an
+    emptied partition's literal directory is missing (a value that
+    needs partition-name escaping): skipping it would leave the
+    retracted rows on disk while reporting success. Returns the
+    touched partitions' keys (tuples of partition values), sorted."""
+    cols = list(table.partition_cols)
+    rm = F.broadcast(rm.select(F.col(rm.columns[0]).alias(id_col)))
+    rows = table.read()
+    hit = (
+        rows.join(rm, id_col, "semi")
+        .groupBy(*cols)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_rm"))
+    )
+    sizes = (
+        rows.groupBy(*cols)
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .join(hit, cols)
+    )
+    touched = {
+        tuple(r[c] for c in cols): int(r["n"]) > int(r["n_rm"])
+        for r in sizes.toLocalIterator()  # O(touched partitions)
+    }
+    fs = statefs_for(table.path)
+    for key in sorted(k for k, partly in touched.items() if not partly):
+        name = "/".join(f"{c}={v}" for c, v in zip(cols, key))
+        d = os.path.join(table.path, name)
+        if not fs.isdir(d):
+            raise ValueError(
+                f"{where}: partition {name!r} exists in the data but "
+                "not at its literal directory path — a value that "
+                "needs partition-name escaping "
+                "(written before run_id validation). Rebuild the "
+                "artifact, or rename the partition, then retry"
+            )
+        fs.rmtree(d)
+    partial = ["§".join(map(str, k)) for k, partly in touched.items() if partly]
+    if partial:
+        _overwrite_partitions(
+            table.read()
+            .filter(F.concat_ws("§", *cols).isin(sorted(partial)))
+            .join(rm, id_col, "anti")
+            .localCheckpoint(eager=True),  # reads the files it replaces
+            table.path,
+            cols,
+        )
+    return sorted(touched)
 
 
 def maybe_autocompact(artifact, run_id: str, max_live_runs) -> "dict | None":

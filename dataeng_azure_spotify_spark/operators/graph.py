@@ -49,6 +49,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -62,12 +63,6 @@ _LAST_STAR_ROUNDS = 0
 #: per call costs planning, not execution).
 _LAST_PR_ROUND_PLAN = ""
 
-#: serializes the legacy conf-flip fallback in :func:`_aqe_off_child`
-#: (only used when the cross-session plan transfer is unavailable)
-import threading as _threading
-
-_PR_SETUP_LOCK = _threading.Lock()
-
 #: pagerank iteration layout: edge rows per partition. ~16 B/row of
 #: (long, long, double) columnar → ~2M rows ≈ tens of MB per task, the
 #: guide's 100 MB-1 GB shuffle-partition band once join/agg state is
@@ -77,21 +72,26 @@ _PR_SETUP_LOCK = _threading.Lock()
 _PR_EDGE_ROWS_PER_PARTITION = 2_000_000
 
 
-def _cross_session(df: DataFrame, target) -> DataFrame | None:
+def _cross_session(df: DataFrame, target) -> DataFrame:
     """Re-bind ``df``'s logical plan to ``target`` (a sibling
     SparkSession on the same SparkContext). Works for checkpointed
     lineages — LogicalRDD leaves carry their RDD, schema, AND captured
     output partitioning as plain fields, so the transfer preserves the
-    partitioning capture pagerank depends on. Returns None if the
-    (internal) classic Dataset.ofRows entry point is unavailable."""
+    partitioning capture pagerank depends on. Raises if the (internal)
+    classic Dataset.ofRows entry point is gone: pagerank's AQE-off
+    window must never fall back to mutating the caller's session
+    conf."""
     try:
-        jvm = df.sparkSession._jvm
-        jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        jdf = df.sparkSession._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
             target._jsparkSession, df._jdf.logicalPlan()
         )
-        return DataFrame(jdf, target)
-    except Exception:
-        return None
+    except (TypeError, Py4JError) as e:  # class or method gone
+        raise RuntimeError(
+            "pagerank: cannot move a plan to a private child session "
+            "(org.apache.spark.sql.classic.Dataset.ofRows failed) — this "
+            "PySpark build is unsupported"
+        ) from e
+    return DataFrame(jdf, target)
 
 
 def _large_star(directed: DataFrame) -> DataFrame:
@@ -410,9 +410,8 @@ def pagerank(
     planned concurrently on other threads keep AQE; the final rank
     table transfers back to the caller's session via its logical plan,
     partitioning capture intact. If the cross-session transfer entry
-    point is unavailable, the legacy conf-flip fallback runs under a
-    module lock (save/restore serialized — concurrent pagerank calls
-    can no longer persist each other's saved value).
+    point is unavailable, pagerank raises rather than flip the
+    caller's conf.
     """
     # one materialization of the (possibly expensive) edge lineage —
     # nodes/degrees/rounds all derive from this checkpoint, so upstream
@@ -444,9 +443,6 @@ def pagerank(
     # partition target either way.
     n_edges = e0.count()
     n_part = max(1, -(-n_edges // _PR_EDGE_ROWS_PER_PARTITION))
-    aqe_key = "spark.sql.adaptive.enabled"
-    sp_key = "spark.sql.shuffle.partitions"
-
     def _setup(e_in):
         e = e_in.repartition(n_part, "s").localCheckpoint(eager=True)
         srcs = e.select("s").distinct().withColumn("has_out", F.lit(True))
@@ -471,9 +467,8 @@ def pagerank(
         ed = e.join(deg, on="s").localCheckpoint(eager=True)
         return nodes, ed
 
-    # preferred path: AQE-off lives on a PRIVATE child session — the
-    # shared conf is never mutated, concurrent planning keeps AQE. The
-    # child also pins shuffle.partitions to the derived n_part so every
+    # AQE-off lives on a PRIVATE child session — the shared conf is
+    # never mutated, concurrent planning keeps AQE. The child also pins shuffle.partitions to the derived n_part so every
     # setup shuffle (distinct/groupBy) lands directly on the iteration
     # layout, and the ROUNDS run on the child too (r13): under AQE each
     # round's one exchange paid 2-3 adaptive stage re-plannings of
@@ -481,26 +476,10 @@ def pagerank(
     # partitioning capture (AdaptiveSparkPlan hides it), re-exchanging
     # the rank side every round. Non-adaptive rounds at n_part width
     # are exchange-free on BOTH join inputs.
-    nodes = ed = None
     child = spark.newSession()
-    child.conf.set(aqe_key, "false")
-    child.conf.set(sp_key, str(n_part))
-    e0_child = _cross_session(e0, child)
-    if e0_child is not None:
-        nodes, ed = _setup(e0_child)
-    if nodes is None or ed is None:
-        # fallback (transfer entry point unavailable): legacy conf flip,
-        # serialized so concurrent calls can't restore a stale value
-        with _PR_SETUP_LOCK:
-            old_aqe = spark.conf.get(aqe_key, "true")
-            old_sp = spark.conf.get(sp_key, "200")
-            spark.conf.set(aqe_key, "false")
-            spark.conf.set(sp_key, str(n_part))
-            try:
-                nodes, ed = _setup(e0)
-            finally:
-                spark.conf.set(aqe_key, old_aqe)
-                spark.conf.set(sp_key, old_sp)
+    child.conf.set("spark.sql.adaptive.enabled", "false")
+    child.conf.set("spark.sql.shuffle.partitions", str(n_part))
+    nodes, ed = _setup(_cross_session(e0, child))
     # one scalar job for BOTH counts (the two separate count() jobs were
     # pure per-job overhead at bench scale)
     stats = nodes.agg(
@@ -510,7 +489,7 @@ def pagerank(
     n = int(stats["n"])
     if n == 0:
         out = nodes.select("node").withColumn("rank", F.lit(0.0))
-        return _cross_session(out, spark) or out
+        return _cross_session(out, spark)
     n_dang = int(stats["nd"] or 0)
     # Join strategy (r13): SHUFFLED-HASH with the rank side as build, at
     # every scale. LogicalRDD sources carry no size stats and the
@@ -574,7 +553,7 @@ def pagerank(
         # materialize ONCE: callers (e.g. the self-certifying entry
         # query) re-read the result several times
         out = ranks.select("node", "rank").localCheckpoint(eager=True)
-        return _cross_session(out, spark) or out
+        return _cross_session(out, spark)
     for it in range(iters):
         rk = ranks.hint("shuffle_hash")
         contribs = (
@@ -618,4 +597,4 @@ def pagerank(
     out = ranks.select("node", "rank")
     # hand the result back on the CALLER's session (the rounds may have
     # run on the private child)
-    return _cross_session(out, spark) or out
+    return _cross_session(out, spark)

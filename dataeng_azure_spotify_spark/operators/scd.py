@@ -26,15 +26,18 @@ At scale:
   micro-batch of K changed keys costs O(K) rows (O(K·versions) for
   SCD2), not the table; the untouched rest is still copied into the
   new parquet snapshot.
-- SCD1 merge shuffles ``target ∪ updates`` on the key. SCD2 incremental
-  makes the same split itself, so over a whole target it still rebuilds
-  only the *affected* keys' histories.
+- SCD1 merge shuffles ``target ∪ updates`` on the key. ``apply_scd2``
+  over a whole target makes the same split itself
+  (:func:`_merge_touched`), so it still rebuilds only the *affected*
+  keys' histories; the gold flow, whose slice is already split, calls
+  the rebuild (:func:`scd2_rebuild`) directly.
 """
 
 from __future__ import annotations
 
 import operator
 from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -64,6 +67,22 @@ def _match_keys(df: DataFrame, touched: DataFrame, keys: "list[str]", how: str) 
         _null_safe_eq(keys, [f"__t_{k}" for k in keys]),
         how,
     )
+
+
+def _merge_touched(
+    old: "DataFrame | None",
+    touched: DataFrame,
+    keys: "list[str]",
+    merge: "Callable[[DataFrame | None], DataFrame]",
+) -> DataFrame:
+    """``old``'s rows whose ``keys`` are not in ``touched``, plus
+    ``merge`` of the rows whose keys are (``merge(None)`` when there is
+    no ``old``): the keyed-merge body of :func:`apply_scd2` and of both
+    gold backends' ``merge_keys``."""
+    if old is None:
+        return merge(None)
+    rest = _match_keys(old, touched, keys, "left_anti")
+    return rest.unionByName(merge(_match_keys(old, touched, keys, "left_semi")))
 
 
 def _order_cols(sequence_by: str, tiebreakers: list[str] | None, desc: bool):
@@ -171,23 +190,42 @@ def apply_scd2(
     unchanged. A micro-batch touching K keys costs
     O(K · versions-per-key), independent of dimension size.
     """
-    if target is None:
+    return _merge_touched(
+        target,
+        updates,
+        keys,
+        lambda affected: scd2_rebuild(
+            affected, updates, keys, sequence_by, tiebreakers,
+            drop_unchanged, tracked_cols,
+        ),
+    )
+
+
+def scd2_rebuild(
+    affected: DataFrame | None,
+    updates: DataFrame,
+    keys: list[str],
+    sequence_by: str,
+    tiebreakers: list[str] | None = None,
+    drop_unchanged: bool = False,
+    tracked_cols: list[str] | None = None,
+) -> DataFrame:
+    """The SCD2 histories of ``updates``' keys, rebuilt from
+    ``affected`` (the target rows of those keys only, or None for an
+    empty target) plus the updates — the ``merge`` that
+    :func:`apply_scd2` and the gold flow's ``merge_keys`` hand the
+    touched slice."""
+    if affected is None:
         return scd2_from_history(
             updates, keys, sequence_by, tiebreakers, drop_unchanged, tracked_cols
         )
-
-    target_affected = _match_keys(target, updates, keys, "left_semi")
-    target_rest = _match_keys(target, updates, keys, "left_anti")
-
     # Each existing SCD2 row *is* the change row that opened it.
-    change_cols = [c for c in target.columns if c not in (START_COL, END_COL, CURRENT_COL)]
-    prior_changes = target_affected.select(*change_cols)
+    change_cols = [c for c in affected.columns if c not in (START_COL, END_COL, CURRENT_COL)]
+    prior_changes = affected.select(*change_cols)
     # distinct() makes the merge idempotent: a re-delivered row identical to
     # an existing version collapses instead of opening a spurious duplicate
     # (Delta MERGE's matched-row no-op equivalent)
     all_changes = prior_changes.unionByName(updates.select(*change_cols)).distinct()
-
-    rebuilt = scd2_from_history(
+    return scd2_from_history(
         all_changes, keys, sequence_by, tiebreakers, drop_unchanged, tracked_cols
     )
-    return target_rest.unionByName(rebuilt)

@@ -37,6 +37,22 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataeng_azure_spotify_spark.statefs import validate_run_id
+
+from .compaction import (
+    CompactionLog,
+    PartitionedTable,
+    check_format_version,
+    fold_runs,
+    id_set,
+    live_run_count,
+    maybe_autocompact,
+    read_registry,
+    reject_compact_namespace,
+    retract_ids,
+    validate_compact_tag,
+)
+
 # scale 20 matches the oracle's DECIMAL(38,20) products; precision 30
 # leaves integer headroom so per-step additions never trigger Spark's
 # precision-loss scale reduction (30,20)+(30,20) -> (31,20) -> exact
@@ -1194,26 +1210,6 @@ _SEM_KEEPERS_SCHEMA = "vid long, vec array<float>, cid long, run string"
 _SEM_BUILD_RUN = "build"
 
 
-def _validate_run_tag(run_id: str, where: str) -> None:
-    """run tags become partition DIRECTORY names; restrict them to
-    characters Spark never escapes so that remove()'s emptied-partition
-    delete (a literal path construction) can always find the directory
-    it targets. Live runs are also barred from the reserved
-    ``compact-`` namespace (consolidated-partition tags)."""
-    import re
-
-    from dataeng_azure_spotify_spark.operators.compaction import (
-        reject_compact_namespace,
-    )
-
-    if not re.fullmatch(r"[A-Za-z0-9._-]+", run_id or ""):
-        raise ValueError(
-            f"{where}: run_id must be non-empty [A-Za-z0-9._-]+ (it "
-            f"names a partition directory); got {run_id!r}"
-        )
-    reject_compact_namespace(run_id, where)
-
-
 class SemanticDedupIndex:
     """Persisted SemDeDup state — the fit-once / admit-many artifact
     form of :func:`semantic_dedup` (the IvfIndex / NearDupLabels /
@@ -1257,12 +1253,6 @@ class SemanticDedupIndex:
     RUNS_DOCS = "runs_docs"
 
     def __init__(self, spark, path: str) -> None:
-        import os
-
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            CompactionLog,
-        )
-
         self.spark = spark
         self.path = path
         self._centroids_path = os.path.join(path, self.CENTROIDS)
@@ -1272,6 +1262,15 @@ class SemanticDedupIndex:
         self._clog = CompactionLog(spark, path)
         self.fs = self._clog.fs  # StateFS (r11): shared per-path dispatch
         self._meta: dict | None = None
+        self._keepers = PartitionedTable(
+            self._keepers_path, self.keepers, ("cid", "run")
+        )
+        #: (run, vid) — kept ids of every COMPACTED run
+        self._registry = PartitionedTable(
+            self._runs_docs_path,
+            lambda: read_registry(spark, self._runs_docs_path, "vid"),
+            ("run",),
+        )
 
     # -- lifecycle ------------------------------------------------------
     @classmethod
@@ -1297,7 +1296,8 @@ class SemanticDedupIndex:
         its own keepers away and returned EMPTY, so the epoch-0
         overwrite sink lost every admitted document."""
         run_tag = _SEM_BUILD_RUN if run_id is None else run_id
-        _validate_run_tag(run_tag, "SemanticDedupIndex.build")
+        validate_run_id(run_tag, "partition")
+        reject_compact_namespace(run_tag, "SemanticDedupIndex.build")
         spark = corpus.sparkSession
         idx = cls(spark, path)
         # meta (the commit marker) is deleted FIRST on rebuild: a crash
@@ -1356,18 +1356,11 @@ class SemanticDedupIndex:
         return self._meta
 
     def _check_version(self) -> None:
-        ver = int(self.meta.get("format_version") or 0)
-        if ver != SEMDEDUP_FORMAT_VERSION:
-            direction = (
-                "rebuild the index with build() to upgrade it"
-                if ver < SEMDEDUP_FORMAT_VERSION
-                else "upgrade this engine; rebuilding would destroy the newer index"
-            )
-            raise ValueError(
-                f"SemanticDedupIndex at {self.path!r} has artifact format "
-                f"v{ver}; this code speaks v{SEMDEDUP_FORMAT_VERSION} — "
-                f"{direction}"
-            )
+        check_format_version(
+            int(self.meta.get("format_version") or 0),
+            SEMDEDUP_FORMAT_VERSION,
+            f"SemanticDedupIndex at {self.path!r}",
+        )
 
     def centroids(self) -> DataFrame:
         return self.spark.read.parquet(self._centroids_path)
@@ -1383,16 +1376,6 @@ class SemanticDedupIndex:
             self.spark.read.schema(_SEM_KEEPERS_SCHEMA)
             .parquet(self._keepers_path)
             .filter(self._clog.live_run_filter("run"))
-        )
-
-    def _registry(self) -> DataFrame:
-        """(run, vid) — kept ids of every COMPACTED run (written by
-        :meth:`compact` step 1; what a folded run's replay returns once
-        row-level run attribution is gone)."""
-        if not self.fs.exists(self._runs_docs_path):
-            return self.spark.createDataFrame([], "run string, vid long")
-        return self.spark.read.schema("run string, vid long").parquet(
-            self._runs_docs_path
         )
 
     # -- incremental admission -----------------------------------------
@@ -1414,7 +1397,8 @@ class SemanticDedupIndex:
         it re-prunes — unless a :meth:`remove`-style retraction freed
         it)."""
         self._check_version()
-        _validate_run_tag(run_id, "SemanticDedupIndex.admit_batch")
+        validate_run_id(run_id or "", "partition")
+        reject_compact_namespace(run_id, "SemanticDedupIndex.admit_batch")
         meta = self.meta
         id_col, vec_col = meta["id_col"], meta["vec_col"]
         thr = float(meta["threshold"])
@@ -1424,7 +1408,7 @@ class SemanticDedupIndex:
             # kept set was frozen into the registry at compact time —
             # re-return the identical admitted rows, mutate nothing
             kept = (
-                self._registry()
+                self._registry.read()
                 .filter(F.col("run") == F.lit(run_id))  # partition-pruned
                 .select(F.col("vid").alias(id_col))
             )
@@ -1536,11 +1520,12 @@ class SemanticDedupIndex:
     # -- retraction -----------------------------------------------------
     def remove(self, ids: DataFrame) -> list[int]:
         """Retract stored keepers (right-to-be-forgotten): rewrite only
-        the ``(cid, run)`` partitions that hold the ids — the
-        IvfIndex.remove discipline (emptied partitions deleted FIRST,
-        idempotent from any intermediate state; partially-touched
-        partitions dynamic-overwrite). Returns the touched cluster ids
-        (empty = none of the ids were stored keepers).
+        the ``(cid, run)`` partitions that hold the ids, and purge the
+        compaction registry the same way — :func:`..compaction.
+        retract_ids` (emptied partitions deleted FIRST, idempotent from
+        any intermediate state; partially-touched partitions
+        dynamic-overwrite). Returns the touched cluster ids (empty =
+        none of the ids were stored keepers).
 
         Contract — deliberately WEAKER than ``NearDupLabels.remove``'s
         re-convergence: documents this keeper pruned were never stored
@@ -1552,109 +1537,14 @@ class SemanticDedupIndex:
         admit_batch docstring promises). Centroids are untouched: they
         are a frozen partition of the space, not per-doc state."""
         self._check_version()
-        rm = (
-            ids.select(F.col(ids.columns[0]).cast("long").alias("vid"))
-            .distinct()
-            .localCheckpoint(eager=True)
+        rm = id_set(ids, "vid")
+        touched = retract_ids(
+            self._keepers, rm, "vid", "SemanticDedupIndex.remove"
         )
-        keep = self.keepers()
-        hit = (
-            keep.join(F.broadcast(rm), "vid", "semi")
-            .groupBy("cid", "run")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rm"))
-        )
-        sizes = (
-            keep.groupBy("cid", "run")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .join(hit, ["cid", "run"])
-        )
-        touched = {
-            (int(r["cid"]), str(r["run"])): (int(r["n"]), int(r["n_rm"]))
-            for r in sizes.toLocalIterator()  # O(touched partitions)
-        }
-        if not touched:
-            return []
-        emptied = sorted(k for k, (n, n_rm) in touched.items() if n == n_rm)
-        partial = sorted(k for k, (n, n_rm) in touched.items() if n > n_rm)
-        # emptied partitions first: dynamic overwrite never touches a
-        # partition absent from the written data (the r7 lesson), and
-        # deleting them up front keeps every intermediate crash state
-        # replay-convergent
-        for c, r in emptied:
-            d = os.path.join(self._keepers_path, f"cid={c}", f"run={r}")
-            if self.fs.isdir(d):
-                self.fs.rmtree(d)
-            else:
-                # within one call a touched partition's rows were just
-                # read, so its directory must exist — unless the run
-                # value needs Hive escaping (a legacy artifact written
-                # before admit_batch validated run_id). Silently
-                # skipping would leave the retracted keepers on disk
-                # while reporting success.
-                raise ValueError(
-                    "SemanticDedupIndex.remove: keeper partition "
-                    f"cid={c}/run={r!r} exists in the data but not at "
-                    "its literal directory path — the run value needs "
-                    "partition-name escaping (written before run_id "
-                    "validation). Rebuild the index, or rename the "
-                    "run partition, then retry"
-                )
-        if partial:
-            want = [f"{c}§{r}" for c, r in partial]
-            key = F.concat_ws("§", F.col("cid"), F.col("run"))
-            remaining = (
-                self.keepers()
-                .filter(key.isin(want))  # only truly-touched partitions
-                .join(F.broadcast(rm), "vid", "anti")
-                # the rewrite reads the very files it replaces —
-                # materialize first (the rebalance discipline)
-                .localCheckpoint(eager=True)
-            )
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("cid", "run")
-                .parquet(self._keepers_path)
-            )
-        self._purge_registry(rm)
+        # and from the registry, so a replay of a folded run cannot
+        # resurrect a removed document
+        retract_ids(self._registry, rm, "vid", "SemanticDedupIndex.remove")
         return sorted({c for c, _ in touched})
-
-    def _purge_registry(self, rm: DataFrame) -> None:
-        """Retract removed vids from the compaction registry too, so a
-        replay of a folded run cannot resurrect a removed document."""
-        reg = self._registry()
-        by_run = {
-            str(r["run"]): int(r["n_rm"])
-            for r in reg.join(F.broadcast(rm), "vid", "left_semi")
-            .groupBy("run")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rm"))
-            .toLocalIterator()  # O(touched runs)
-        }
-        if not by_run:
-            return
-        sizes = {
-            str(r["run"]): int(r["n"])
-            for r in reg.filter(F.col("run").isin(sorted(by_run)))
-            .groupBy("run")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .toLocalIterator()
-        }
-        emptied = sorted(r for r in by_run if sizes[r] == by_run[r])
-        partial_runs = sorted(r for r in by_run if sizes[r] > by_run[r])
-        for r in emptied:  # deleted FIRST — the remove() discipline
-            self.fs.rmtree(os.path.join(self._runs_docs_path, f"run={r}"))
-        if partial_runs:
-            remaining = (
-                reg.filter(F.col("run").isin(partial_runs))
-                .join(F.broadcast(rm), "vid", "anti")
-                .localCheckpoint(eager=True)  # reads the files it replaces
-            )
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run")
-                .parquet(self._runs_docs_path)
-            )
 
     # -- maintenance ------------------------------------------------------
     def live_run_count(self) -> int:
@@ -1662,14 +1552,7 @@ class SemanticDedupIndex:
         (distinct names minus committed-folded) — the quantity the
         :func:`...operators.compaction.maybe_autocompact` policy
         thresholds. One StateFS listing pass, no Spark job."""
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            distinct_run_names,
-        )
-
-        return len(
-            distinct_run_names(self._keepers_path, nested=True)
-            - self._clog.folded()
-        )
+        return live_run_count(self._clog, [self._keepers_path], nested=True)
 
     def compact(self, tag: str) -> dict:
         """Fold every live keeper run partition into ONE consolidated
@@ -1680,78 +1563,12 @@ class SemanticDedupIndex:
         answered from the per-run kept-id registry. Protocol and
         crash-window analysis: :mod:`..operators.compaction`.
         Single-writer: quiesce admissions first."""
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            count_run_partitions,
-            delete_folded_partitions,
-            is_compact_tag,
-            validate_compact_tag,
-        )
-
         validate_compact_tag(tag, "SemanticDedupIndex.compact")
         self._check_version()
-        dirs_before = count_run_partitions(self._keepers_path, nested=True)
-        committed = self._clog.committed()
-        swept = delete_folded_partitions(
-            self._keepers_path,
-            {r for fl in committed.values() for r in fl},
-            nested=True,
+        return fold_runs(
+            self._clog, tag, [self._keepers],
+            registry=(self._runs_docs_path, "vid"),
         )
-        live = self.keepers().localCheckpoint(eager=True)
-        runs_now = sorted(
-            str(r["run"])
-            for r in live.select("run").distinct().collect()  # O(runs)
-        )
-        to_fold = [r for r in runs_now if r != tag]
-        if not to_fold:
-            live.unpersist()
-            return {
-                "tag": tag,
-                "folded_runs": [],
-                "swept_dirs": swept,
-                "partition_dirs_before": dirs_before,
-                "partition_dirs_after": count_run_partitions(
-                    self._keepers_path, nested=True
-                ),
-                "replay": tag in committed,
-            }
-        originals = [r for r in to_fold if not is_compact_tag(r)]
-        if originals:  # step 1 — freeze each folded run's kept-id set
-            (
-                live.filter(F.col("run").isin(originals))
-                .select("run", "vid")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run")
-                .parquet(self._runs_docs_path)
-            )
-        (  # step 2 — consolidated rows under the (uncommitted) tag
-            live.select("vid", "vec", "cid", F.lit(tag).alias("run"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cid", "run")
-            .parquet(self._keepers_path)
-        )
-        folded_all = set(to_fold)  # step 3 — COMMIT (+ superseded tags)
-        for t in to_fold:
-            folded_all |= set(committed.get(t, []))
-        self._clog.commit(tag, sorted(folded_all))
-        delete_folded_partitions(  # step 4 — reclaim listings
-            self._keepers_path, folded_all, nested=True
-        )
-        for t in to_fold:
-            if t in committed:
-                self._clog.drop_marker(t)
-        live.unpersist()
-        return {
-            "tag": tag,
-            "folded_runs": to_fold,
-            "swept_dirs": swept,
-            "partition_dirs_before": dirs_before,
-            "partition_dirs_after": count_run_partitions(
-                self._keepers_path, nested=True
-            ),
-            "replay": False,
-        }
 
 
 class IncrementalSemanticDedup:
@@ -1791,10 +1608,6 @@ class IncrementalSemanticDedup:
         self.max_live_runs = max_live_runs
 
     def admit(self, batch: DataFrame, run_id: str | None = None) -> DataFrame:
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            maybe_autocompact,
-        )
-
         if self.max_live_runs is not None and run_id is None:
             # fail BEFORE the admission commit (the substring twin's
             # discipline): the policy's fold tag derives from run_id
@@ -2094,55 +1907,14 @@ class IvfIndex:
         remaining work. Cost: one 2-column scan to locate the ids
         (buckets are partitioned by centroid, not id — the same
         locality trade the label table makes) + a rewrite of touched
-        partitions only."""
-        rm = (
-            ids.select(F.col(ids.columns[0]).alias(self.id_col))
-            .distinct()
-            .localCheckpoint(eager=True)
+        partitions only (:func:`..compaction.retract_ids`)."""
+        touched = retract_ids(
+            PartitionedTable(self._buckets_path, self.buckets, ("centroid_id",)),
+            id_set(ids, self.id_col, cast=None),
+            self.id_col,
+            "IvfIndex.remove",
         )
-        hit = (
-            self.buckets()
-            .join(F.broadcast(rm), self.id_col, "semi")
-            .groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rm"))
-        )
-        sizes = (
-            self.buckets()
-            .groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .join(hit, "centroid_id")
-        )
-        touched = {
-            int(r["centroid_id"]): (int(r["n"]), int(r["n_rm"]))
-            for r in sizes.toLocalIterator()  # O(touched centroids)
-        }
-        if not touched:
-            return []
-        emptied = sorted(c for c, (n, n_rm) in touched.items() if n == n_rm)
-        partial = sorted(c for c, (n, n_rm) in touched.items() if n > n_rm)
-        # emptied partitions first: dynamic overwrite never touches a
-        # partition absent from the written data, and deleting them
-        # up front keeps every intermediate state replay-convergent
-        for c in emptied:
-            self.fs.rmtree(
-                os.path.join(self._buckets_path, f"centroid_id={c}")
-            )
-        if partial:
-            remaining = (
-                self.buckets()
-                .filter(F.col("centroid_id").isin(partial))
-                .join(F.broadcast(rm), self.id_col, "anti")
-                # the rewrite reads the very files it replaces —
-                # materialize first (the rebalance discipline)
-                .localCheckpoint(eager=True)
-            )
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("centroid_id")
-                .parquet(self._buckets_path)
-            )
-        return sorted(touched)
+        return [c for (c,) in touched]
 
     # -- maintenance ------------------------------------------------------
     def compact(self) -> dict:

@@ -52,7 +52,21 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataeng_azure_spotify_spark.functions.text import hash60, tokens_col
+from dataeng_azure_spotify_spark.statefs import validate_run_id
 
+from .compaction import (
+    CompactionLog,
+    PartitionedTable,
+    check_format_version,
+    fold_runs,
+    id_set,
+    live_run_count,
+    maybe_autocompact,
+    read_registry,
+    reject_compact_namespace,
+    retract_ids,
+    validate_compact_tag,
+)
 from .dedup import _spread
 
 
@@ -351,8 +365,8 @@ class SubstringDupIndex:
     corpus grew), then the span window over batch positions. The
     stored table is linear in admitted corpus tokens — it IS the
     corpus's gram profile, the price of exact substring-level state.
-    Per-run partitions accrete like the other artifacts (compact by
-    rebuilding if run count grows unwieldy).
+    Per-run partitions accrete like the other artifacts; :meth:`compact`
+    folds them.
     """
 
     GRAMS = "grams"
@@ -360,10 +374,6 @@ class SubstringDupIndex:
     RUNS_DOCS = "runs_docs"
 
     def __init__(self, spark, path: str) -> None:
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            CompactionLog,
-        )
-
         self.spark = spark
         self.path = path
         self._grams_path = os.path.join(path, self.GRAMS)
@@ -372,6 +382,15 @@ class SubstringDupIndex:
         self._clog = CompactionLog(spark, path)
         self.fs = self._clog.fs  # StateFS (r11): shared per-path dispatch
         self._meta: dict | None = None
+        self._grams = PartitionedTable(
+            self._grams_path, self.grams, ("bucket", "run")
+        )
+        #: (run, doc) — admitted doc ids of every COMPACTED run
+        self._registry = PartitionedTable(
+            self._runs_docs_path,
+            lambda: read_registry(spark, self._runs_docs_path, "doc"),
+            ("run",),
+        )
 
     # -- lifecycle ------------------------------------------------------
     @classmethod
@@ -424,19 +443,11 @@ class SubstringDupIndex:
         return self._meta
 
     def _check_version(self) -> None:
-        ver = int(self.meta.get("format_version") or 0)
-        if ver != SUBSTR_FORMAT_VERSION:
-            direction = (
-                "rebuild the index with build() to upgrade it"
-                if ver < SUBSTR_FORMAT_VERSION
-                else "upgrade this engine; rebuilding would destroy the "
-                "newer index"
-            )
-            raise ValueError(
-                f"SubstringDupIndex at {self.path!r} has artifact format "
-                f"v{ver}; this code speaks v{SUBSTR_FORMAT_VERSION} — "
-                f"{direction}"
-            )
+        check_format_version(
+            int(self.meta.get("format_version") or 0),
+            SUBSTR_FORMAT_VERSION,
+            f"SubstringDupIndex at {self.path!r}",
+        )
 
     @staticmethod
     def _doc_gram_counts(
@@ -476,16 +487,6 @@ class SubstringDupIndex:
             self.spark.read.schema(_SUBSTR_GRAMS_SCHEMA)
             .parquet(self._grams_path)
             .filter(self._clog.live_run_filter("run"))
-        )
-
-    def _registry(self) -> DataFrame:
-        """(run, doc) — admitted doc ids of every COMPACTED run (written
-        by :meth:`compact` step 1; the information a folded run's replay
-        needs once row-level run attribution is gone)."""
-        if not self.fs.exists(self._runs_docs_path):
-            return self.spark.createDataFrame([], "run string, doc long")
-        return self.spark.read.schema("run string, doc long").parquet(
-            self._runs_docs_path
         )
 
     # -- admission ------------------------------------------------------
@@ -529,7 +530,7 @@ class SubstringDupIndex:
             .filter(F.col("run") == F.lit(run_id))
             .select("doc")
             .union(
-                self._registry()
+                self._registry.read()
                 .filter(F.col("run") == F.lit(run_id))
                 .select("doc")
             )
@@ -620,26 +621,15 @@ class SubstringDupIndex:
         this run's ``(bucket, run)`` partitions. A replay of a run a
         committed :meth:`compact` has folded is answered from the
         registry — the same admitted rows, no state mutation."""
-        import re
-
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            reject_compact_namespace,
-        )
-
         self._check_version()
-        if not re.fullmatch(r"[A-Za-z0-9._-]+", run_id or ""):
-            raise ValueError(
-                "SubstringDupIndex.admit_batch: run_id must be "
-                "non-empty [A-Za-z0-9._-]+ (it names a partition "
-                f"directory); got {run_id!r}"
-            )
+        validate_run_id(run_id or "", "partition")
         reject_compact_namespace(run_id, "SubstringDupIndex.admit_batch")
         if run_id in self._clog.folded_originals():
             # this run's rows live in the consolidated partition; its
             # admitted set was frozen into the registry at compact time
             meta = self.meta
             kept = (
-                self._registry()
+                self._registry.read()
                 .filter(F.col("run") == F.lit(run_id))  # partition-pruned
                 .select(F.col("doc").alias(meta["id_col"]))
             )
@@ -680,63 +670,18 @@ class SubstringDupIndex:
         trade — the table is bucketed by gram, not doc), then only the
         touched ``(bucket, run)`` partitions rewrite — emptied ones
         deleted FIRST so every intermediate crash state replays
-        convergently. Returns the number of touched partitions.
+        convergently (:func:`..compaction.retract_ids`, which also
+        purges the registry). Returns the number of touched partitions.
         Future admissions simply see lower totals; a twin of a removed
         document re-evaluates freshly (nothing to re-converge — the
         stored state is pure counts)."""
         self._check_version()
-        rm = (
-            ids.select(F.col(ids.columns[0]).cast("long").alias("doc"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        g = self.grams()
-        hit = (
-            g.join(F.broadcast(rm), "doc", "semi")
-            .groupBy("bucket", "run")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rm"))
-        )
-        sizes = (
-            g.groupBy("bucket", "run")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .join(hit, ["bucket", "run"])
-        )
-        touched = {
-            (int(r["bucket"]), str(r["run"])): (int(r["n"]), int(r["n_rm"]))
-            for r in sizes.toLocalIterator()  # O(touched partitions)
-        }
-        if not touched:
-            return 0
-        emptied = sorted(t for t, (n, n_rm) in touched.items() if n == n_rm)
-        partial = sorted(t for t, (n, n_rm) in touched.items() if n > n_rm)
-        for b, r in emptied:
-            d = os.path.join(self._grams_path, f"bucket={b}", f"run={r}")
-            if self.fs.isdir(d):
-                self.fs.rmtree(d)
-            else:
-                raise ValueError(
-                    "SubstringDupIndex.remove: gram partition "
-                    f"bucket={b}/run={r!r} exists in the data but not "
-                    "at its literal directory path (a run value that "
-                    "needs partition-name escaping) — rebuild the "
-                    "index, then retry"
-                )
-        if partial:
-            want = [f"{b}§{r}" for b, r in partial]
-            key = F.concat_ws("§", F.col("bucket"), F.col("run"))
-            remaining = (
-                self.grams()
-                .filter(key.isin(want))
-                .join(F.broadcast(rm), "doc", "anti")
-                .localCheckpoint(eager=True)  # reads the files it replaces
-            )
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket", "run")
-                .parquet(self._grams_path)
-            )
-        self._purge_registry(rm)
+        rm = id_set(ids, "doc")
+        touched = retract_ids(self._grams, rm, "doc", "SubstringDupIndex.remove")
+        # and from the registry, so a replay of a folded run cannot
+        # resurrect a removed document (a removed doc's rows are gone,
+        # so a crashed-run replay re-evaluates without them)
+        retract_ids(self._registry, rm, "doc", "SubstringDupIndex.remove")
         return len(touched)
 
     # -- maintenance ------------------------------------------------------
@@ -745,14 +690,7 @@ class SubstringDupIndex:
         names minus committed-folded ones) — the per-probe file-listing
         load the :func:`...operators.compaction.maybe_autocompact`
         policy thresholds. One StateFS listing pass, no Spark job."""
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            distinct_run_names,
-        )
-
-        return len(
-            distinct_run_names(self._grams_path, nested=True)
-            - self._clog.folded()
-        )
+        return live_run_count(self._clog, [self._grams_path], nested=True)
 
     def compact(self, tag: str) -> dict:
         """Fold every live run partition into ONE consolidated
@@ -773,128 +711,12 @@ class SubstringDupIndex:
         Returns a summary dict with the folded runs and the on-disk
         ``run=`` partition-directory count before/after — the
         file-listing load every probe pays."""
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            count_run_partitions,
-            delete_folded_partitions,
-            is_compact_tag,
-            validate_compact_tag,
-        )
-
         validate_compact_tag(tag, "SubstringDupIndex.compact")
         self._check_version()
-        dirs_before = count_run_partitions(self._grams_path, nested=True)
-        # step 0 — sweep: folded dirs a prior crash (between marker
-        # commit and deletion) left behind are invisible to readers but
-        # still cost listings; clean them first so a retry converges
-        committed = self._clog.committed()
-        swept = delete_folded_partitions(
-            self._grams_path,
-            {r for fl in committed.values() for r in fl},
-            nested=True,
+        return fold_runs(
+            self._clog, tag, [self._grams],
+            registry=(self._runs_docs_path, "doc"),
         )
-        live = self.grams().localCheckpoint(eager=True)
-        runs_now = sorted(
-            str(r["run"])
-            for r in live.select("run").distinct().collect()  # O(runs)
-        )
-        to_fold = [r for r in runs_now if r != tag]
-        if not to_fold:
-            live.unpersist()
-            return {
-                "tag": tag,
-                "folded_runs": [],
-                "swept_dirs": swept,
-                "partition_dirs_before": dirs_before,
-                "partition_dirs_after": count_run_partitions(
-                    self._grams_path, nested=True
-                ),
-                "replay": tag in committed,
-            }
-        # step 1 — registry: freeze each original folded run's admitted
-        # doc set (compact tags being re-folded already had theirs
-        # frozen; their registry rows stay keyed by the ORIGINAL run)
-        originals = [r for r in to_fold if not is_compact_tag(r)]
-        if originals:
-            (
-                live.filter(F.col("run").isin(originals))
-                .select("run", "doc")
-                .distinct()
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run")
-                .parquet(self._runs_docs_path)
-            )
-        # step 2 — consolidated rows under the (uncommitted) tag
-        (
-            live.select("g", "doc", "c", "bucket", F.lit(tag).alias("run"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket", "run")
-            .parquet(self._grams_path)
-        )
-        # step 3 — COMMIT: the marker carries the folded runs PLUS the
-        # folded sets of any superseded tags (so their markers can be
-        # dropped without resurrecting rows a lingering dir still holds)
-        folded_all = set(to_fold)
-        for t in to_fold:
-            folded_all |= set(committed.get(t, []))
-        self._clog.commit(tag, sorted(folded_all))
-        # step 4 — reclaim listings: folded dirs + superseded markers
-        delete_folded_partitions(self._grams_path, folded_all, nested=True)
-        for t in to_fold:
-            if t in committed:
-                self._clog.drop_marker(t)
-        live.unpersist()
-        return {
-            "tag": tag,
-            "folded_runs": to_fold,
-            "swept_dirs": swept,
-            "partition_dirs_before": dirs_before,
-            "partition_dirs_after": count_run_partitions(
-                self._grams_path, nested=True
-            ),
-            "replay": False,
-        }
-
-    def _purge_registry(self, rm: DataFrame) -> None:
-        """Retract removed docs from the compaction registry too, so a
-        replay of a folded run cannot resurrect a removed document
-        (mirrors the pre-compaction behavior: a removed doc's rows are
-        gone, so a crashed-run replay re-evaluates without them)."""
-        reg = self._registry()
-        hit = reg.join(F.broadcast(rm), "doc", "left_semi")
-        by_run = {
-            str(r["run"]): int(r["n_rm"])
-            for r in hit.groupBy("run")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rm"))
-            .toLocalIterator()  # O(touched runs)
-        }
-        if not by_run:
-            return
-        sizes = {
-            str(r["run"]): int(r["n"])
-            for r in reg.filter(F.col("run").isin(sorted(by_run)))
-            .groupBy("run")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .toLocalIterator()
-        }
-        emptied = sorted(r for r in by_run if sizes[r] == by_run[r])
-        partial_runs = sorted(r for r in by_run if sizes[r] > by_run[r])
-        for r in emptied:  # deleted FIRST — the remove() discipline
-            d = os.path.join(self._runs_docs_path, f"run={r}")
-            self.fs.rmtree(d)
-        if partial_runs:
-            remaining = (
-                reg.filter(F.col("run").isin(partial_runs))
-                .join(F.broadcast(rm), "doc", "anti")
-                .localCheckpoint(eager=True)  # reads the files it replaces
-            )
-            (
-                remaining.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run")
-                .parquet(self._runs_docs_path)
-            )
 
 
 class IncrementalSubstringDedup:
@@ -936,10 +758,6 @@ class IncrementalSubstringDedup:
         self.max_live_runs = max_live_runs
 
     def admit(self, batch: DataFrame, run_id: str | None = None) -> DataFrame:
-        from dataeng_azure_spotify_spark.operators.compaction import (
-            maybe_autocompact,
-        )
-
         if self.max_live_runs is not None and run_id is None:
             # fail BEFORE the admission commit — the policy would raise
             # anyway (its fold tag derives from run_id), and failing

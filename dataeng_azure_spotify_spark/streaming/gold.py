@@ -8,7 +8,7 @@ stream whose ``foreachBatch`` body applies the SCD merge
     silver stream ─▶ foreachBatch(batch):
         table.merge_keys(keys, batch keys, merge)
           before, rest = live gold snapshot split by the batch's keys
-          merged = apply_scd1|apply_scd2(before, batch, keys, sequence_by)
+          merged = apply_scd1|scd2_rebuild(before, batch, keys, sequence_by)
           write rest ∪ merged as the next snapshot, atomically repoint
 
 Both SCD types commit through :meth:`ParquetSnapshotTable.merge_keys`,
@@ -47,9 +47,10 @@ from dataeng_azure_spotify_spark.delta_support import delta_available
 from dataeng_azure_spotify_spark.operators.relational import expectations_drop
 from dataeng_azure_spotify_spark.operators.scd import (
     _match_keys,
+    _merge_touched,
     _null_safe_eq,
     apply_scd1,
-    apply_scd2,
+    scd2_rebuild,
 )
 from dataeng_azure_spotify_spark.statefs import statefs_for
 
@@ -642,22 +643,6 @@ def _fit(df: DataFrame, schema) -> DataFrame:
     )
 
 
-def _merge_touched(
-    old: "DataFrame | None",
-    touched: DataFrame,
-    keys: "list[str]",
-    merge: "Callable[[DataFrame | None], DataFrame]",
-) -> DataFrame:
-    """``old``'s rows whose ``keys`` are not in ``touched``, plus
-    ``merge`` of the rows whose keys are (``merge(None)`` when there is
-    no ``old``): the keyed-merge body both backends' ``merge_keys``
-    commit."""
-    if old is None:
-        return merge(None)
-    rest = _match_keys(old, touched, keys, "left_anti")
-    return rest.unionByName(merge(_match_keys(old, touched, keys, "left_semi")))
-
-
 class DeltaSnapshotTable:
     """Delta-backed twin of :class:`ParquetSnapshotTable` (same surface:
     read/exists/overwrite/history/read_version/vacuum) for clusters where
@@ -855,7 +840,8 @@ class CdcFlow:
 
         Both SCD types commit through the table's ``merge_keys``, which
         hands the merge only the rows of the batch's keys:
-        :func:`apply_scd1` or :func:`apply_scd2` on that slice. On the
+        :func:`apply_scd1` or :func:`scd2_rebuild` on that slice (the
+        slice is already split, so not :func:`apply_scd2`). On the
         delta backend SCD1 is instead a true transactional ``DeltaTable
         .merge`` (``whenMatchedUpdateAll`` guarded by the sequence order,
         ``whenNotMatchedInsertAll`` — the exact shape of the reference's
@@ -876,7 +862,7 @@ class CdcFlow:
             merge = partial(apply_scd1, **args)
         else:
             merge = partial(
-                apply_scd2,
+                scd2_rebuild,
                 **args,
                 drop_unchanged=self.drop_unchanged,
                 tracked_cols=self._tracked_cols(batch),

@@ -12,12 +12,50 @@ from pyspark.sql import functions as F
 
 from dataeng_azure_spotify_spark.operators import compaction as C
 
-# slow tier (r14): multi-round parquet write/rewrite e2e — exceeds the driver verify window; run with -m slow
-pytestmark = pytest.mark.slow
+# Most tests here are slow (multi-round parquet write/rewrite e2e) and
+# marked one by one; one crash test per artifact and the retraction
+# unit test run in the default tier, so every run checks the protocol.
+slow = pytest.mark.slow
 
 
 def _run_dirs(table_path: str, nested: bool = True) -> int:
     return C.count_run_partitions(table_path, nested=nested)
+
+
+# --------------------------------------------------------------------------
+# retract_ids (the shared partition-level retraction)
+# --------------------------------------------------------------------------
+
+
+def test_retract_ids_rewrites_partial_drops_emptied_and_refuses_escaped(
+    spark, tmp_path
+):
+    """A partly hit partition is rewritten without the ids, an emptied
+    one is deleted, and an emptied partition whose literal directory is
+    missing (a value Spark escapes in the path) raises instead of
+    reporting success with the rows still on disk."""
+    schema = "id long, p int, run string"
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, 0, "a"), (2, 0, "a"), (3, 1, "a"), (4, 0, "b"), (5, 0, "x:y")],
+        schema,
+    ).write.partitionBy("p", "run").parquet(path)
+    table = C.PartitionedTable(
+        path, lambda: spark.read.schema(schema).parquet(path), ("p", "run")
+    )
+
+    def ids(*xs):
+        return C.id_set(spark.createDataFrame([(x,) for x in xs], "x long"), "x")
+
+    assert C.retract_ids(table, ids(1, 3, 99), "id", "t") == [(0, "a"), (1, "a")]
+    assert {r.id for r in table.read().collect()} == {2, 4, 5}
+    assert not os.path.exists(os.path.join(path, "p=1", "run=a"))
+    assert os.path.isdir(os.path.join(path, "p=0", "run=a"))
+    assert C.retract_ids(table, ids(99), "id", "t") == []
+
+    with pytest.raises(ValueError, match="literal directory"):
+        C.retract_ids(table, ids(5), "id", "t")
+    assert {r.id for r in table.read().collect()} == {2, 4, 5}
 
 
 # --------------------------------------------------------------------------
@@ -71,6 +109,7 @@ def _coverage_snapshot(idx, probe):
     }
 
 
+@slow
 def test_substring_compact_probe_identical(spark, tmp_path):
     """compact folds every run into one partition per bucket; gram rows,
     coverage, and admission decisions are byte-identical; the dir count
@@ -108,6 +147,7 @@ def test_substring_compact_probe_identical(spark, tmp_path):
     assert again["folded_runs"] == [] and again["replay"]
 
 
+@slow
 def test_substring_compact_then_admit_then_recompact(spark, tmp_path):
     """Post-compact admissions land normally; a second compact folds the
     previous tag + the new runs; replays of runs folded by EITHER
@@ -133,6 +173,27 @@ def test_substring_compact_then_admit_then_recompact(spark, tmp_path):
     assert {r.doc_id for r in idx.admit_batch(b4, "e4").collect()} == {40}
 
 
+@slow
+def test_substring_refold_into_committed_tag_keeps_its_replays(spark, tmp_path):
+    """Folding new runs into an already committed tag keeps the tag's
+    earlier folds in its marker: their replays still answer from the
+    registry instead of re-admitting rows the tag already holds."""
+    idx, dfs, admitted, probe = _substring_state(spark, tmp_path)
+    idx.compact("compact-1")
+    b4 = spark.createDataFrame([(40, UNIQ[6])], "doc_id long, text string")
+    assert {r.doc_id for r in idx.admit_batch(b4, "e4").collect()} == {40}
+    before_rows = _grams_snapshot(idx)
+
+    s = idx.compact("compact-1")
+    assert s["folded_runs"] == ["e4"]
+    assert {"e0", "e1", "e2", "e3", "e4"} <= idx._clog.folded_originals()
+    for rid in ("e0", "e1"):
+        replay = {r.doc_id for r in idx.admit_batch(dfs[rid], rid).collect()}
+        assert replay == admitted[rid], rid
+    assert _grams_snapshot(idx) == before_rows
+
+
+@slow
 def test_substring_compact_remove_interplay(spark, tmp_path):
     """remove() after compact retracts from the consolidated partition
     AND the registry: the doc's twin becomes admissible and a folded-run
@@ -200,6 +261,7 @@ def test_substring_compact_crash_windows(spark, tmp_path, monkeypatch):
     assert replay == admitted["e1"]
 
 
+@slow
 def test_substring_compact_guards(spark, tmp_path):
     """Tag namespace enforced on both sides: compact refuses plain run
     ids, admission refuses ids in the compact namespace."""
@@ -254,6 +316,7 @@ def _keepers_snapshot(idx):
     }
 
 
+@slow
 def test_semantic_compact_probe_identical(spark, tmp_path):
     """Keeper rows identical through compact; folded-run replays (incl.
     the run_id-attributed BOOTSTRAP epoch) answer from the registry;
@@ -363,6 +426,7 @@ def _labels_map(idx):
     return {r.doc_id: r.cluster_id for r in idx.labels().collect()}
 
 
+@slow
 def test_ndl_compact_probe_identical(spark, tmp_path):
     """Shingle/prefix partitions fold; labels identical; a post-compact
     append still finds candidates stored by FOLDED runs (the prefix
@@ -440,6 +504,41 @@ def test_ndl_compact_skips_in_flight_crashed_run(spark, tmp_path, monkeypatch):
     assert 40 in _labels_map(idx)
 
 
+@slow
+def test_ndl_refold_into_committed_tag_keeps_its_rows(spark, tmp_path):
+    """A second fold into an already committed tag rewrites the tag's
+    partition with its earlier rows plus the new run's, so documents
+    folded the first time stay findable by later appends."""
+    from pyspark.sql import Row
+
+    from dataeng_azure_spotify_spark.operators.cluster_index import (
+        PREFIX_SCHEMA,
+    )
+
+    idx, b1, b2 = _ndl_state(spark, tmp_path)
+    idx.compact("compact-1")
+    idx.append(
+        spark.createDataFrame([Row(doc_id=30, text="yet another novel text")]),
+        run_id="e3",
+    )
+    before = _labels_map(idx)
+    s = idx.compact("compact-1")
+    assert s["folded_runs"] == ["e3"]
+    assert _labels_map(idx) == before
+    stored = {
+        r.doc
+        for r in idx._read_or_empty(idx._prefix_path, PREFIX_SCHEMA).collect()
+    }
+    assert stored == {0, 1, 2, 10, 20, 30}
+    twin = spark.createDataFrame(
+        [Row(doc_id=50, text="fresh corpus text with novel shingle content")]
+    )
+    idx.append(twin, run_id="e4")
+    final = _labels_map(idx)
+    assert final[50] == final[20]
+
+
+@slow
 def test_ndl_compact_remove_after_fold(spark, tmp_path):
     """remove() keeps working on consolidated partitions: the witness
     doc's shingle/prefix rows are purged from the tag partition and the
@@ -470,6 +569,7 @@ def test_ndl_compact_remove_after_fold(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
+@slow
 def test_ivf_compact_files(spark, tmp_path):
     """File-level compaction: appended per-run files collapse to one per
     bucket; rows (incl. run_id attribution) and probe results are
@@ -517,6 +617,7 @@ def test_ivf_compact_files(spark, tmp_path):
     assert idx.buckets().filter(F.col("vec_id") == 100).count() == 0
 
 
+@slow
 def test_ivf_compact_with_pq_codes_leg(spark, tmp_path):
     """The r10 codes leg rides the SAME bucket rows, so compaction,
     removal and run attribution carry it with zero new protocol:
@@ -574,6 +675,7 @@ def test_ivf_compact_with_pq_codes_leg(spark, tmp_path):
 # --------------------------------------------------------------------------
 
 
+@slow
 def test_engine_compact_artifacts_fans_out(spark, tmp_path):
     """One Engine.compact_artifacts call compacts every registered
     artifact (tagged protocol for the run-partitioned three, file-level

@@ -252,8 +252,8 @@ def test_pagerank_setup_never_touches_shared_session_conf(spark, monkeypatch):
     from dataeng_azure_spotify_spark.operators import graph as graph_mod
     from dataeng_azure_spotify_spark.operators.graph import pagerank
 
-    # the preferred cross-session path must be live in this environment
-    # (the conf-flip fallback exists only for future entry-point moves)
+    # the cross-session path must be live in this environment (there is
+    # no conf-flip fallback: pagerank raises without it)
     probe = spark.range(3).localCheckpoint(eager=True)
     child = spark.newSession()
     assert graph_mod._cross_session(probe, child) is not None

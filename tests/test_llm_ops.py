@@ -2165,9 +2165,11 @@ def test_semantic_index_remove_retracts_and_frees(spark, tmp_path):
     )
     assert idx.admit_batch(twin, run_id="e0").count() == 0
 
-    # (e) unsafe run_id refused before any state is touched
-    with _pytest.raises(ValueError, match="run_id"):
-        idx.admit_batch(twin, run_id="bad run/id")
+    # (e) unsafe run_id (bad charset, over 128 chars) refused before
+    # any state is touched
+    for bad in ("bad run/id", "x" * 129):
+        with _pytest.raises(ValueError, match="run_id"):
+            idx.admit_batch(twin, run_id=bad)
 
     # (d) unknown ids: no-op
     ghost = spark.createDataFrame([(777,)], "vec_id long")
